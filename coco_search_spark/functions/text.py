@@ -168,12 +168,6 @@ def section_col(text: Column) -> Column:
     ).otherwise(F.lit(None).cast("string"))
 
 
-def sha256_col(c: Column) -> Column:
-    """Content hash for incremental-state identity
-    (reference: flow.py:348-351 sha256 file identity)."""
-    return F.sha2(c, 256)
-
-
 # ---------------------------------------------------------------- python twin
 
 def py_split_identifier(identifier: str) -> list[str]:

@@ -141,30 +141,11 @@ def build_nodes(edges: DataFrame, extra_entities: DataFrame | None = None) -> Da
     )
 
 
-def degree_contrib(edges: DataFrame) -> DataFrame:
-    """(entity_id, d_out, d_in) — the degree contribution of an edge subset
-    (same row semantics as build_nodes: every edge occurrence counts once).
-    Used by the incremental node-maintenance path on delta-sized inputs."""
-    endpoints = edges.select(
-        F.col("subj_id").alias("entity_id"), F.lit(1).alias("is_out")
-    ).unionAll(
-        edges.select(F.col("obj_id").alias("entity_id"), F.lit(0).alias("is_out"))
-    )
-    return (
-        endpoints.filter(F.col("entity_id").isNotNull())
-        .groupBy("entity_id")
-        .agg(
-            F.coalesce(F.sum("is_out"), F.lit(0)).alias("d_out"),
-            F.coalesce(F.sum(1 - F.col("is_out")), F.lit(0)).alias("d_in"),
-        )
-    )
-
-
 def degree_delta(new_edges: DataFrame, old_edges: DataFrame) -> DataFrame:
     """Signed degree contribution of replacing ``old_edges`` with
     ``new_edges`` — (entity_id, d_out, d_in) where each value is
     contrib(new) − contrib(old). ONE aggregation over the signed endpoint
-    union instead of two ``degree_contrib`` aggs joined full-outer
+    union instead of two per-side degree aggs joined full-outer
     (3 shuffles → 1); the signed sums combine map-side exactly like the
     unsigned ones, so the skew posture is unchanged."""
 
@@ -201,10 +182,14 @@ def apply_degree_delta(
     delta: DataFrame,
     standalone_ids: DataFrame,
 ) -> DataFrame:
-    """``old_nodes`` + a signed (entity_id, d_out, d_in) delta →
-    maintained node table; membership refreshed from the CURRENT
-    standalone set (same rule as apply_node_delta, whose add/sub pair this
-    skips when the caller already has the signed delta)."""
+    """Incremental node maintenance: degrees are pure sums over edge rows,
+    so ``old_nodes`` + a signed (entity_id, d_out, d_in) delta
+    (degree_delta: contrib(replaced conversations' NEW edges) − contrib(their
+    OLD edges)) is the maintained node table. ``standalone_ids`` is the
+    CURRENT relation-free entity set (a dirty conversation can add or drop
+    the only mention keeping a degree-0 node alive): rows whose degrees drop
+    to zero survive only while standalone-mentioned — the same membership
+    rule build_nodes applies on the full rebuild."""
     return (
         old_nodes.select(
             "entity_id",
@@ -234,45 +219,6 @@ def apply_degree_delta(
         )
         .drop("is_standalone")
     )
-
-
-def apply_node_delta(
-    old_nodes: DataFrame,
-    add: DataFrame,
-    sub: DataFrame,
-    standalone_ids: DataFrame,
-) -> DataFrame:
-    """Incremental node maintenance: degrees are pure sums over edge rows,
-    so new_nodes = old_nodes − contrib(replaced conversations' OLD edges)
-    + contrib(their NEW edges). ``standalone_ids`` is the CURRENT
-    relation-free entity set (standalone mentions resolve per run — a
-    dirty conversation can add or drop the only mention keeping a degree-0
-    node alive). Every input except the corpus-derived contributions is
-    vocabulary-sized; the contributions are delta-sized. Rows whose
-    degrees drop to zero survive only while standalone-mentioned — the
-    same membership rule build_nodes applies on the full rebuild."""
-    delta = (
-        add.select("entity_id", "d_out", "d_in")
-        .join(
-            sub.select(
-                "entity_id",
-                F.col("d_out").alias("s_out"),
-                F.col("d_in").alias("s_in"),
-            ),
-            "entity_id",
-            "full_outer",
-        )
-        .select(
-            "entity_id",
-            (F.coalesce("d_out", F.lit(0)) - F.coalesce("s_out", F.lit(0))).alias(
-                "d_out"
-            ),
-            (F.coalesce("d_in", F.lit(0)) - F.coalesce("s_in", F.lit(0))).alias(
-                "d_in"
-            ),
-        )
-    )
-    return apply_degree_delta(old_nodes, delta, standalone_ids)
 
 
 def _attach_metadata(edges: DataFrame) -> DataFrame:

@@ -7,14 +7,14 @@ mention set are all per-conversation-distinct UNIONS over the fact table:
     cnt(key) = number of conversations whose facts contain key
 
 Counts are pure sums over per-conversation contributions, so — exactly
-like node degrees (materialize.apply_node_delta) — a warm run maintains
+like node degrees (materialize.apply_degree_delta) — a warm run maintains
 them from the delta instead of re-scanning the corpus:
 
     new = old − contrib(replaced conversations' previous facts)
               + contrib(their current facts)
 
 where "replaced" = changed + deleted conversations, their previous facts
-fetched via the indexed read (StateStore.read_table conv_ids pushdown).
+fetched via the indexed read (StateStore.read_convs).
 A negative count means the subtracted facts were not what the snapshot
 held — the caller falls back to the full recompute loudly (unknown is
 not known-unchanged). The maintained table is vocabulary-sized, so the
@@ -46,7 +46,7 @@ def vocab_contrib(facts: DataFrame) -> DataFrame:
     standalone mentions and alias bindings). ``cnt`` counts conversations,
     not occurrences, so contributions add and subtract exactly across
     runs. ``k2`` is '' except for binding pairs (a NULL key would not join
-    in apply_vocab_delta). NULL k1 rows are dropped — the extraction
+    in apply_vocab_signed). NULL k1 rows are dropped — the extraction
     grammar never emits them, and a NULL join key would break the delta
     join the same way."""
     return (
@@ -124,21 +124,6 @@ def apply_vocab_signed(old: DataFrame, delta: DataFrame) -> DataFrame:
         )
         .filter(F.col("cnt") != 0)
     )
-
-
-def apply_vocab_delta(old: DataFrame, add: DataFrame, sub: DataFrame) -> DataFrame:
-    """new cnt = old + add − sub (compat form over precomputed per-side
-    contributions; the pipeline uses the fused vocab_contrib_delta +
-    apply_vocab_signed path)."""
-    delta = (
-        add.select(*_KEYS, F.col("cnt").alias("a"))
-        .join(sub.select(*_KEYS, F.col("cnt").alias("s")), _KEYS, "full_outer")
-        .select(
-            *_KEYS,
-            (F.coalesce("a", F.lit(0)) - F.coalesce("s", F.lit(0))).alias("d"),
-        )
-    )
-    return apply_vocab_signed(old, delta)
 
 
 def vocab_surfaces(vocab: DataFrame) -> DataFrame:

@@ -126,16 +126,6 @@ def decode_wav_pcm16(payload: bytes) -> tuple[np.ndarray, int]:
     return samples.reshape(-1, n_channels), sample_rate
 
 
-def decode_media(payload: bytes, media_type: str):
-    """Dispatch: real decode where no codec library is needed, stub (raise)
-    elsewhere — callers choose fake_decode for the stubbed formats in tests."""
-    if media_type == "image/x-portable-pixmap":
-        return decode_ppm(payload)
-    if media_type == "audio/wav":
-        return decode_wav_pcm16(payload)
-    return decode_stub(payload, media_type)
-
-
 def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     """Nearest-neighbor resize via numpy index grids — the real resize
     operator for decoded image arrays (no PIL needed)."""

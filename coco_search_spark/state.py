@@ -49,10 +49,10 @@ POINTER_COLS = {
     "edges": "edges_wv",
 }
 
-# Max changed-conversation ids collected to the driver for diff_table's
-# pushed `conv_id isin(...)` predicate — same bound and fallback rule as
-# pipeline.py's EDGE_FETCH_PUSHDOWN_LIMIT.
-DIFF_PUSHDOWN_LIMIT = 100_000
+# Max conversation ids collected to the driver for a pushed
+# `conv_id isin(...)` predicate (StateStore.read_convs; ~100 bytes/id →
+# ≤ ~10 MB driver-side). Above it the read keeps the semi-join form.
+PUSHDOWN_LIMIT = 100_000
 
 # Delta-written tables (facts, chunks) fold back into one full part once
 # the part list reaches this length: bounds reader fan-in (and file-listing
@@ -644,6 +644,31 @@ class StateStore:
             )
         return out
 
+    def read_convs(
+        self,
+        spark: SparkSession,
+        kind: str,
+        ids: DataFrame,
+        versions: tuple = (None,),
+    ) -> list[DataFrame]:
+        """The ``kind`` rows of the conversations in ``ids`` (a ``conv_id``
+        frame), one frame per entry of ``versions`` (None: the current
+        snapshot).
+
+        The ids are collected ONCE, capped at PUSHDOWN_LIMIT (the driver-
+        memory guard), and pushed into every read as an ``isin`` predicate:
+        row groups whose conv_id stats miss the set are skipped unread — an
+        indexed fetch instead of an O(table) scan. Above the cap each read
+        semi-joins ``ids`` instead: correct, just not row-group-pruned."""
+        sample = ids.take(PUSHDOWN_LIMIT + 1)
+        if len(sample) > PUSHDOWN_LIMIT:
+            return [
+                self.read_table(spark, kind, version=v).join(ids, "conv_id", "left_semi")
+                for v in versions
+            ]
+        conv_ids = [r["conv_id"] for r in sample]
+        return [self.read_table(spark, kind, conv_ids=conv_ids, version=v) for v in versions]
+
     def changed_convs(
         self, spark: SparkSession, kind: str, v_from: int, v_to: int | None = None
     ) -> DataFrame:
@@ -712,25 +737,7 @@ class StateStore:
         if v_from == v_to:
             return empty
         changed = self.changed_convs(spark, kind, v_from, v_to)
-        # bounded collect → pushed isin predicate on the part scans (row
-        # groups whose conv_id stats miss the set are skipped unread);
-        # above the cap the semi-join form reads the parts in full —
-        # correct, just not pruned (same rule as the pipeline's
-        # previous-edges fetch, pipeline.py EDGE_FETCH_PUSHDOWN_LIMIT)
-        sample = changed.take(DIFF_PUSHDOWN_LIMIT + 1)
-        if len(sample) <= DIFF_PUSHDOWN_LIMIT:
-            ids = [r["conv_id"] for r in sample]
-            if not ids:
-                return empty
-            rows_from = self.read_table(spark, kind, conv_ids=ids, version=v_from)
-            rows_to = self.read_table(spark, kind, conv_ids=ids, version=v_to)
-        else:
-            rows_from = self.read_table(spark, kind, version=v_from).join(
-                changed, "conv_id", "left_semi"
-            )
-            rows_to = self.read_table(spark, kind, version=v_to).join(
-                changed, "conv_id", "left_semi"
-            )
+        rows_from, rows_to = self.read_convs(spark, kind, changed, versions=(v_from, v_to))
         rows_from, rows_to = _align_columns(rows_from, rows_to)
         maps = _map_cols(rows_to)
         rows_from, rows_to = _encode_maps(rows_from, maps), _encode_maps(rows_to, maps)
