@@ -24,20 +24,27 @@ each a separate rule):
 - APPOSITIVE  ``subj , which <phrase> obj``       → (subj, pred, obj)
 - NEGATION    ``subj never/not <phrase> obj``     → NOTHING (stop rule)
 
-Function words (``which``/``is``/``by``) are excluded as subjects/objects —
+Function words and negation markers (``STOP_IDENTS``) are excluded as
+entities —
 the appositive tail "which <phrase> obj" would otherwise also match the
 active form with subj="which" (the stop-filter is the cross-form
 disambiguation rule, applied identically in every implementation).
 
-Two interchangeable implementations, asserted equal in tests:
+One compiler, ``_compile(families)``, is the only code that turns the
+grammar tables (``GRAMMAR``, ``MENTION_GRAMMAR``, ``ALIAS_BINDING_RE``) into
+Spark Columns: one ``array<struct<kind, subj, pred, obj, m, mention,
+mention_kind, target, alias>>`` per family selection, pure Catalyst
+(guarded ``regexp_extract_all`` per form, capture groups re-extracted from
+each short match). Regex runs JVM-side inside whole-stage codegen — zero
+Python serde, the scale path. ``extract_all`` dedups that array with
+provenance in one shuffle; ``extract_triples``,
+``extract_standalone_mentions``, ``extract_alias_bindings`` and
+``extract_triples_prov`` are projections of the same compiled array with
+one family selected.
 
-- ``extract_triples``   — pure Catalyst: per-form ``regexp_extract_all``
-  capture groups zipped positionally and exploded once. The whole extractor
-  lives inside whole-stage codegen; at 10^12 turns this is the scale path
-  (regex runs JVM-side, zero Python serde).
-- ``extract_triples_arrow`` — Arrow-batched ``mapInPandas`` running the
-  pure-Python reference rules per batch (the north star's "vectorized
-  pandas/Arrow UDF extraction"); useful when rules outgrow regex.
+``extract_triples_arrow`` runs the same rules in Python per Arrow batch
+(``mapInPandas``). It is the test-only parity oracle, never a product
+path: Python regex per row is the UDF cost the native path avoids.
 
 Duplicates within a turn (including duplicates manufactured by segment
 overlap) are removed exactly like the reference's ``_deduplicate_edges``
@@ -46,8 +53,10 @@ overlap) are removed exactly like the reference's ``_deduplicate_edges``
 
 from __future__ import annotations
 
+import operator
 import re
 from collections.abc import Iterator
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -155,77 +164,235 @@ def _phrase_words(mapping: dict[str, str]) -> list[str]:
     return sorted({phrase.split(" ")[0] for phrase in mapping})
 
 
-def _form_triples(
-    seg: Column,
-    regex: str,
-    swap: bool,
-    mapping: dict[str, str],
-    guards: list[str],
-    with_match: bool = False,
-) -> Column:
-    """array<struct<subj,pred,obj[,m]>> of this form's matches in seg.
+# "X <phrase> Y as Z" — Z is a local alias for Y (the reference's aliased
+# import, deps/extractors/python.py aliased-import rules); the triple
+# (X, pred, Y) itself is already produced by the active form.
+ALIAS_BINDING_RE = rf"\b(?:{IDENT_RE})\s+(?:{_PHRASE_ALT})\s+({IDENT_RE})\s+as\s+({IDENT_RE})\b"
 
-    ONE full-text regex scan per form (group 0); capture groups are then
-    re-extracted from each short match string — O(match length), not
-    another pass over the segment. Running 3 scans instead of 9 keeps the
-    extractor's cost ≈ the single-form round-1 extractor despite 3× the
-    grammar. ``with_match`` additionally carries the raw group-0 match
-    string (for provenance offsets)."""
-    pred_map = _map_expr(mapping)
-    matches = _guarded_matches(seg, regex, _phrase_words(mapping), guards)
-    g = lambda m, i: F.regexp_extract(m, regex, i)  # noqa: E731
 
-    def triple(m, obj_group: int):
-        fields = [
-            g(m, 3 if swap else 1).alias("subj"),
-            pred_map[F.regexp_replace(g(m, 2), r"\s+", " ")].alias("pred"),
-            g(m, 1 if swap else obj_group).alias("obj"),
-        ]
-        if with_match:
-            fields.append(m.alias("m"))
-        return F.struct(*fields)
+# ---------------------------------------------------------------------------
+# Standalone mention extraction (X2 full): entities mentioned WITHOUT a
+# relation still become mention rows / KG nodes — the analog of the
+# reference extracting symbols independently of dependency edges
+# (reference: src/cocosearch/indexer/symbols.py:423-483). The grammar is
+# context-typed: a marker construction assigns each mention a kind, like
+# the reference's symbol kinds (function/class/... per node type).
+# ---------------------------------------------------------------------------
 
-    if re.compile(regex).groups >= 4:  # conjunction: second object → second triple
-        # both triples built in ONE pass over ONE match array — a concat of
-        # two transforms duplicates the guarded regexp_extract_all expression
-        # (and so the full-text regex scan) in the physical plan
-        return F.flatten(
-            F.transform(matches, lambda m: F.array(triple(m, 3), triple(m, 4)))
+# (regex with ONE capture group, mention_kind, guard literals)
+MENTION_GRAMMAR: list[tuple[str, str, list[str]]] = [
+    (rf"\bsee\s+({IDENT_RE})\b", "reference", ["see"]),
+    (
+        rf"\bthe\s+({IDENT_RE})\s+(?:module|component|subsystem)\b",
+        "definition",
+        ["module", "component", "subsystem"],
+    ),
+]
+
+
+# ---------------------------------------------------------------------------
+# The grammar compiler. At 10^12 turns the corpus scan IS the cost, so every
+# family selected in one call is computed in ONE projection over ONE scan
+# and exploded once; the per-family functions below are projections of the
+# same compiled array, so their outputs agree with extract_all's by
+# construction (tests/test_round3.py parity test).
+# ---------------------------------------------------------------------------
+
+EXTRACT_KINDS = ("triple", "mention", "binding")
+
+# struct fields after ``kind``; a family leaves the others null. ``m`` is a
+# triple's raw group-0 match string (for provenance offsets).
+_FACT_FIELDS = ("subj", "pred", "obj", "m", "mention", "mention_kind", "target", "alias")
+_ENTITY_FIELDS = ("subj", "obj", "mention", "target", "alias")
+
+# Memo for the compiled grammar Columns, keyed on the family tuple. Building
+# one costs ~0.6-0.9 s of DRIVER time (hundreds of py4j round-trips
+# marshalling the regex alternations into Catalyst expression objects) and
+# the result is an immutable unresolved expression — independent of
+# DataFrame and session, valid for the lifetime of the gateway JVM (one per
+# Python process). Without it the build cost was paid on EVERY pipeline
+# run, warm runs included, where it was a measurable slice of the floor.
+_COL_CACHE: dict = {}
+
+
+def _cached_col(key, builder):
+    col = _COL_CACHE.get(key)
+    if col is None:
+        col = builder()
+        _COL_CACHE[key] = col
+    return col
+
+
+def _fact(kind: str, **fields: Column) -> Column:
+    return F.struct(
+        F.lit(kind).alias("kind"),
+        *[fields.get(f, F.lit(None).cast("string")).alias(f) for f in _FACT_FIELDS],
+    )
+
+
+def _family_arrays(families: tuple[str, ...]) -> Iterator[Column]:
+    """One fact array per grammar form of the selected families.
+
+    ONE full-text regex scan per form (group 0, behind the instr guards);
+    capture groups are then re-extracted from each short match string —
+    O(match length), not another pass over the segment."""
+    seg = F.col("seg_text")
+    if "triple" in families:
+        for rx, swap, mapping, guards in GRAMMAR:
+            pred_map = _map_expr(mapping)
+            matches = _guarded_matches(seg, rx, _phrase_words(mapping), guards)
+
+            # transform() calls its lambda at once, so the loop variables
+            # bind per form
+            def triple(m, obj_group):
+                g = lambda i: F.regexp_extract(m, rx, i)  # noqa: E731
+                return _fact(
+                    "triple",
+                    subj=g(3 if swap else 1),
+                    pred=pred_map[F.regexp_replace(g(2), r"\s+", " ")],
+                    obj=g(1 if swap else obj_group),
+                    m=m,
+                )
+
+            if re.compile(rx).groups >= 4:
+                # conjunction: both triples built in ONE pass over ONE match
+                # array — a concat of two transforms duplicates the guarded
+                # regexp_extract_all (and so the full-text regex scan) in
+                # the physical plan
+                yield F.flatten(
+                    F.transform(matches, lambda m: F.array(triple(m, 3), triple(m, 4)))
+                )
+            else:
+                yield F.transform(matches, lambda m: triple(m, 3))
+    if "mention" in families:
+        for rx, kind, guards in MENTION_GRAMMAR:
+            matches = _guarded_matches(seg, rx, guards, [], group=1)
+            yield F.transform(
+                matches, lambda x: _fact("mention", mention=x, mention_kind=F.lit(kind))
+            )
+    if "binding" in families:
+        matches = _guarded_matches(
+            seg, ALIAS_BINDING_RE, _phrase_words(PRED_OF_PHRASE), ["as"]
         )
-    return F.transform(matches, lambda m: triple(m, 3))
+        yield F.transform(
+            matches,
+            lambda x: _fact(
+                "binding",
+                target=F.regexp_extract(x, ALIAS_BINDING_RE, 1),
+                alias=F.regexp_extract(x, ALIAS_BINDING_RE, 2),
+            ),
+        )
+
+
+def _compile(families: tuple[str, ...]) -> Column:
+    """The grammar compiler: ``array<struct<kind, subj, pred, obj, m,
+    mention, mention_kind, target, alias>>`` of every fact the selected
+    families find in ``seg_text``, memoised per family tuple."""
+    return _cached_col(families, lambda: F.concat(*_family_arrays(families)))
+
+
+def _explode_facts(segments: DataFrame, families: tuple[str, ...], *keep: str) -> DataFrame:
+    """One row per compiled fact (``keep`` columns + the struct fields),
+    after THE stop filter: no entity field may be a stop ident."""
+    facts = segments.select(*keep, F.explode(_compile(families)).alias("t"))
+    not_stop = [
+        F.col(f).isNull() | ~F.col(f).isin(*STOP_IDENTS) for f in _ENTITY_FIELDS
+    ]
+    return facts.select(*keep, "t.*").filter(reduce(operator.and_, not_stop))
+
+
+def extract_all(
+    segments: DataFrame, families: tuple[str, ...] = EXTRACT_KINDS
+) -> DataFrame:
+    """segments (from ``segment_turns(..., with_offsets=True)``) → one
+    deduped row per extracted fact, tagged by ``kind``:
+
+    - kind='triple':  subj, pred, obj, src_offset, src_seg_idx
+    - kind='mention': mention, mention_kind        (standalone, X2)
+    - kind='binding': target, alias                (in-text alias evidence)
+
+    One corpus scan, one explode, one shuffle; provenance offsets ride the
+    same min-struct aggregate the dedup needs anyway (map-side combine, so
+    the exchange carries ≈unique facts). ``src_offset`` is the 1-based
+    position of the evidencing match in the reassembled turn text: the
+    minimum over MATCHING segments of (segment start_char + first
+    occurrence of the match within that segment) — global strpos of the
+    match unless the string also occurs unmatched earlier, in which case
+    the first MATCHED site is the more useful answer. ``src_seg_idx`` is
+    that segment. Both are null for non-triple kinds. ``families`` selects
+    which of ``EXTRACT_KINDS`` to extract."""
+    keys = ["conv_id", "turn_idx", "kind", *(f for f in _FACT_FIELDS if f != "m")]
+    facts = _explode_facts(
+        segments, families, "conv_id", "turn_idx", "seg_idx", "start_char", "seg_text"
+    )
+    pos = F.col("start_char") + F.expr("instr(seg_text, m)")
+    prov = F.min(F.struct(F.col("pos").alias("src_offset"), F.col("seg_idx").alias("src_seg_idx")))
+    return (
+        facts.select(*keys, "seg_idx", pos.alias("pos"))
+        .groupBy(*keys)
+        .agg(prov.alias("prov"))
+        .select(*keys, "prov.src_offset", "prov.src_seg_idx")
+    )
+
+
+def split_extracted(combined: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """extract_all output → (triples, standalone_mentions, alias_bindings)
+    with each family's canonical schema. The filters run over the already-
+    deduped (fact-sized, post-shuffle) table — splitting is free."""
+    triples = combined.filter(F.col("kind") == "triple").select(
+        "conv_id", "turn_idx", "subj", "pred", "obj", "src_offset", "src_seg_idx"
+    )
+    mentions = combined.filter(F.col("kind") == "mention").select(
+        "conv_id", "turn_idx", "mention", "mention_kind"
+    )
+    bindings = combined.filter(F.col("kind") == "binding").select(
+        "conv_id", "turn_idx", "target", "alias"
+    )
+    return triples, mentions, bindings
 
 
 def extract_triples(segments: DataFrame) -> DataFrame:
     """segments → distinct (conv_id, turn_idx, subj, pred, obj) triples.
+    The distinct is the only shuffle — partial aggregation collapses the
+    segment-overlap dupes before exchange."""
+    return (
+        _explode_facts(segments, ("triple",), "conv_id", "turn_idx")
+        .select("conv_id", "turn_idx", "subj", "pred", "obj")
+        .distinct()
+    )
 
-    One projection computes every form's match array, a single explode
-    flattens their concatenation, and the distinct is the only shuffle —
-    partial aggregation (map-side combine) collapses the overlap dupes
-    before exchange, so the shuffle carries ≈unique triples only.
-    """
-    all_forms = _cached_col(
-        "extract_triples",
-        lambda: F.concat(
-            *[
-                _form_triples(F.col("seg_text"), rx, sw, mp, gd)
-                for rx, sw, mp, gd in GRAMMAR
-            ]
-        ),
+
+def extract_triples_prov(segments: DataFrame) -> DataFrame:
+    """``extract_triples`` plus per-edge provenance (``src_offset``,
+    ``src_seg_idx``, see ``extract_all``) — the analog of the reference's
+    per-edge JSONB metadata (module / line / alias, reference:
+    src/cocosearch/deps/db.py:46, extractors/python.py:96-106). Requires
+    ``segment_turns(..., with_offsets=True)`` input."""
+    return split_extracted(extract_all(segments, ("triple",)))[0]
+
+
+def extract_standalone_mentions(segments: DataFrame) -> DataFrame:
+    """segments → distinct (conv_id, turn_idx, mention, mention_kind) rows
+    from marker constructions ("see X", "the X module") — relation-free
+    entity evidence."""
+    return (
+        _explode_facts(segments, ("mention",), "conv_id", "turn_idx")
+        .select("conv_id", "turn_idx", "mention", "mention_kind")
+        .distinct()
     )
-    exploded = (
-        segments.select("conv_id", "turn_idx", F.explode(all_forms).alias("t"))
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.col("t.subj").alias("subj"),
-            F.col("t.pred").alias("pred"),
-            F.col("t.obj").alias("obj"),
-        )
-        .filter(
-            ~F.col("subj").isin(*STOP_IDENTS) & ~F.col("obj").isin(*STOP_IDENTS)
-        )
+
+
+def extract_alias_bindings(segments: DataFrame) -> DataFrame:
+    """segments → distinct (conv_id, turn_idx, target, alias) rows from
+    'X <phrase> TARGET as ALIAS' sentences. These bindings are explicit
+    same-entity evidence for canonicalization (canonicalize_surfaces'
+    extra_edges) — the only evidence when the alias shares no tokens or
+    shingles with the target."""
+    return (
+        _explode_facts(segments, ("binding",), "conv_id", "turn_idx")
+        .select("conv_id", "turn_idx", "target", "alias")
+        .distinct()
     )
-    return exploded.distinct()
 
 
 _ARROW_GRAMMAR = [
@@ -263,336 +430,6 @@ def extract_triples_arrow(segments: DataFrame) -> DataFrame:
         .mapInPandas(run, schema=TRIPLE_SCHEMA)
         .distinct()
     )
-
-
-# "X <phrase> Y as Z" — Z is a local alias for Y (the reference's aliased
-# import, deps/extractors/python.py aliased-import rules); the triple
-# (X, pred, Y) itself is already produced by the active form.
-ALIAS_BINDING_RE = rf"\b(?:{IDENT_RE})\s+(?:{_PHRASE_ALT})\s+({IDENT_RE})\s+as\s+({IDENT_RE})\b"
-
-
-def extract_alias_bindings(segments: DataFrame) -> DataFrame:
-    """segments → distinct (conv_id, turn_idx, target, alias) rows from
-    'X <phrase> TARGET as ALIAS' sentences. These bindings are explicit
-    same-entity evidence for canonicalization (canonicalize_surfaces'
-    extra_edges) — the only evidence when the alias shares no tokens or
-    shingles with the target."""
-    guarded = _guarded_matches(
-        F.col("seg_text"), ALIAS_BINDING_RE, _phrase_words(PRED_OF_PHRASE), ["as"]
-    )
-    return (
-        segments.select("conv_id", "turn_idx", F.explode(guarded).alias("m"))
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.regexp_extract(F.col("m"), ALIAS_BINDING_RE, 1).alias("target"),
-            F.regexp_extract(F.col("m"), ALIAS_BINDING_RE, 2).alias("alias"),
-        )
-        .filter(~F.col("target").isin(*STOP_IDENTS) & ~F.col("alias").isin(*STOP_IDENTS))
-        .distinct()
-    )
-
-
-def extract_triples_prov(segments: DataFrame) -> DataFrame:
-    """Like ``extract_triples`` but with per-edge provenance — the analog of
-    the reference's per-edge JSONB metadata (module / line / alias,
-    reference: src/cocosearch/deps/db.py:46, extractors/python.py:96-106):
-
-    - ``src_offset``: 1-based char position of the evidencing match in the
-      reassembled turn text — precisely: the minimum over MATCHING segments
-      of (segment start_char + first occurrence of the match string within
-      that segment). This equals global strpos(turn_text, match) whenever
-      the earliest substring occurrence lies in a segment that also
-      contains a regex match (always true when the matched string appears
-      only at match sites, e.g. the oracle-gated derived data); a string
-      that also occurs unmatched strictly earlier in a match-free segment
-      would anchor provenance at the first MATCHED site instead — the more
-      useful answer for "why does this edge exist".
-    - ``src_seg_idx``: the segment index of that earliest occurrence.
-
-    Requires ``segment_turns(..., with_offsets=True)`` input (start_char
-    column). Same single-shuffle shape as extract_triples: the groupBy
-    min(struct) combines map-side, so the exchange carries ≈unique triples.
-    """
-    all_forms = _cached_col(
-        "extract_triples_prov",
-        lambda: F.concat(
-            *[
-                _form_triples(F.col("seg_text"), rx, sw, mp, gd, with_match=True)
-                for rx, sw, mp, gd in GRAMMAR
-            ]
-        ),
-    )
-    exploded = (
-        segments.select(
-            "conv_id", "turn_idx", "seg_idx", "start_char", "seg_text",
-            F.explode(all_forms).alias("t"),
-        )
-        .select(
-            "conv_id",
-            "turn_idx",
-            "seg_idx",
-            F.col("t.subj").alias("subj"),
-            F.col("t.pred").alias("pred"),
-            F.col("t.obj").alias("obj"),
-            (F.col("start_char") + F.expr("instr(seg_text, t.m)")).alias("pos"),
-        )
-        .filter(
-            ~F.col("subj").isin(*STOP_IDENTS) & ~F.col("obj").isin(*STOP_IDENTS)
-        )
-    )
-    prov = F.min(
-        F.struct(F.col("pos").alias("src_offset"), F.col("seg_idx").alias("src_seg_idx"))
-    ).alias("prov")
-    return (
-        exploded.groupBy("conv_id", "turn_idx", "subj", "pred", "obj")
-        .agg(prov)
-        .select(
-            "conv_id",
-            "turn_idx",
-            "subj",
-            "pred",
-            "obj",
-            F.col("prov.src_offset").alias("src_offset"),
-            F.col("prov.src_seg_idx").alias("src_seg_idx"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Standalone mention extraction (X2 full): entities mentioned WITHOUT a
-# relation still become mention rows / KG nodes — the analog of the
-# reference extracting symbols independently of dependency edges
-# (reference: src/cocosearch/indexer/symbols.py:423-483). The grammar is
-# context-typed: a marker construction assigns each mention a kind, like
-# the reference's symbol kinds (function/class/... per node type).
-# ---------------------------------------------------------------------------
-
-# (regex with ONE capture group, mention_kind, guard literals)
-MENTION_GRAMMAR: list[tuple[str, str, list[str]]] = [
-    (rf"\bsee\s+({IDENT_RE})\b", "reference", ["see"]),
-    (
-        rf"\bthe\s+({IDENT_RE})\s+(?:module|component|subsystem)\b",
-        "definition",
-        ["module", "component", "subsystem"],
-    ),
-]
-
-
-def _tag_mention(kind: str):
-    # closure factory — pyspark inspects HOF lambda arity, so the kind must
-    # be bound via closure, not a default argument
-    return lambda x: F.struct(x.alias("mention"), F.lit(kind).alias("mention_kind"))
-
-
-def extract_standalone_mentions(segments: DataFrame) -> DataFrame:
-    """segments → distinct (conv_id, turn_idx, mention, mention_kind) rows
-    from marker constructions ("see X", "the X module") — relation-free
-    entity evidence. Pure Catalyst: one guarded regex scan per marker form,
-    one explode, distinct; same shuffle shape as extract_triples."""
-    seg = F.col("seg_text")
-    arrays = []
-    for rx, kind, guards in MENTION_GRAMMAR:
-        m = _guarded_matches(seg, rx, guards, [], group=1)
-        arrays.append(F.transform(m, _tag_mention(kind)))
-    return (
-        segments.select("conv_id", "turn_idx", F.explode(F.concat(*arrays)).alias("t"))
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.col("t.mention").alias("mention"),
-            F.col("t.mention_kind").alias("mention_kind"),
-        )
-        .filter(~F.col("mention").isin(*STOP_IDENTS))
-        .distinct()
-    )
-
-
-# ---------------------------------------------------------------------------
-# Unified one-scan extraction: at 10^12 turns the corpus scan IS the cost,
-# so the pipeline must not read it once per extraction family. extract_all
-# computes every family's match arrays (4 triple forms + 2 mention markers
-# + alias bindings) in ONE projection over ONE scan, explodes once, and
-# dedups everything through ONE shuffle (groupBy with map-side combine).
-# The per-family functions above remain the composable/driver-query units;
-# their outputs are provably identical (tests/test_round3.py parity test).
-# ---------------------------------------------------------------------------
-
-EXTRACT_KINDS = ("triple", "mention", "binding")
-
-# Memo for the big grammar Column trees. Building one costs ~0.6-0.9 s of
-# DRIVER time (hundreds of py4j round-trips marshalling the regex
-# alternations into Catalyst expression objects) and the result is an
-# immutable unresolved expression — independent of DataFrame and session,
-# valid for the lifetime of the gateway JVM (one per Python process). The
-# build cost was paid on EVERY pipeline run, warm runs included, where it
-# was a measurable slice of the fixed floor.
-_COL_CACHE: dict = {}
-
-
-def _cached_col(key: str, builder):
-    col = _COL_CACHE.get(key)
-    if col is None:
-        col = builder()
-        _COL_CACHE[key] = col
-    return col
-
-
-def _null_str(name: str):
-    return F.lit(None).cast("string").alias(name)
-
-
-def extract_all(segments: DataFrame) -> DataFrame:
-    """segments (from ``segment_turns(..., with_offsets=True)``) → one
-    deduped row per extracted fact, tagged by ``kind``:
-
-    - kind='triple':  subj, pred, obj, src_offset, src_seg_idx
-    - kind='mention': mention, mention_kind        (standalone, X2)
-    - kind='binding': target, alias                (in-text alias evidence)
-
-    One corpus scan, one explode, one shuffle; provenance offsets ride the
-    same min-struct aggregate the triple dedup needs anyway."""
-    seg = F.col("seg_text")
-
-    def triple_builder(regex: str, swap: bool, pred_map, obj_group: int):
-        def build(m):
-            g = lambda i: F.regexp_extract(m, regex, i)  # noqa: E731
-            return F.struct(
-                F.lit("triple").alias("kind"),
-                g(3 if swap else 1).alias("subj"),
-                pred_map[F.regexp_replace(g(2), r"\s+", " ")].alias("pred"),
-                g(1 if swap else obj_group).alias("obj"),
-                m.alias("m"),
-                _null_str("mention"),
-                _null_str("mention_kind"),
-                _null_str("target"),
-                _null_str("alias"),
-            )
-
-        return build
-
-    def build_all_forms():
-        arrays = []
-        for rx, sw, mp, gd in GRAMMAR:
-            pred_map = _map_expr(mp)
-            matches = _guarded_matches(seg, rx, _phrase_words(mp), gd)
-            if re.compile(rx).groups >= 4:
-                # one pass over one match array builds both triples —
-                # appending two transforms would duplicate the guarded
-                # regexp_extract_all (and so the full-text regex scan) in
-                # the physical plan
-                b3 = triple_builder(rx, sw, pred_map, 3)
-                b4 = triple_builder(rx, sw, pred_map, 4)
-                arrays.append(
-                    F.flatten(F.transform(matches, lambda m: F.array(b3(m), b4(m))))
-                )
-            else:
-                arrays.append(
-                    F.transform(matches, triple_builder(rx, sw, pred_map, 3))
-                )
-        for rx, kind, guards in MENTION_GRAMMAR:
-            m_arr = _guarded_matches(seg, rx, guards, [], group=1)
-            arrays.append(F.transform(m_arr, mention_builder(kind)))
-        b_arr = _guarded_matches(
-            seg, ALIAS_BINDING_RE, _phrase_words(PRED_OF_PHRASE), ["as"]
-        )
-        arrays.append(F.transform(b_arr, binding_builder))
-        return F.concat(*arrays)
-
-    def mention_builder(kind: str):
-        def build(x):
-            return F.struct(
-                F.lit("mention").alias("kind"),
-                _null_str("subj"),
-                _null_str("pred"),
-                _null_str("obj"),
-                _null_str("m"),
-                x.alias("mention"),
-                F.lit(kind).alias("mention_kind"),
-                _null_str("target"),
-                _null_str("alias"),
-            )
-
-        return build
-
-    def binding_builder(x):
-        return F.struct(
-            F.lit("binding").alias("kind"),
-            _null_str("subj"),
-            _null_str("pred"),
-            _null_str("obj"),
-            _null_str("m"),
-            _null_str("mention"),
-            _null_str("mention_kind"),
-            F.regexp_extract(x, ALIAS_BINDING_RE, 1).alias("target"),
-            F.regexp_extract(x, ALIAS_BINDING_RE, 2).alias("alias"),
-        )
-
-    all_forms = _cached_col("extract_all", build_all_forms)
-
-    stop = list(STOP_IDENTS)
-    exploded = (
-        segments.select(
-            "conv_id", "turn_idx", "seg_idx", "start_char", "seg_text",
-            F.explode(all_forms).alias("t"),
-        )
-        .select(
-            "conv_id",
-            "turn_idx",
-            "seg_idx",
-            F.col("t.kind").alias("kind"),
-            F.col("t.subj").alias("subj"),
-            F.col("t.pred").alias("pred"),
-            F.col("t.obj").alias("obj"),
-            F.col("t.mention").alias("mention"),
-            F.col("t.mention_kind").alias("mention_kind"),
-            F.col("t.target").alias("target"),
-            F.col("t.alias").alias("alias"),
-            # null for non-triple kinds (instr of a null match is null)
-            (F.col("start_char") + F.expr("instr(seg_text, t.m)")).alias("pos"),
-        )
-        .filter(
-            (F.col("kind") != "triple")
-            | (~F.col("subj").isin(*stop) & ~F.col("obj").isin(*stop))
-        )
-        .filter((F.col("kind") != "mention") | ~F.col("mention").isin(*stop))
-        .filter(
-            (F.col("kind") != "binding")
-            | (~F.col("target").isin(*stop) & ~F.col("alias").isin(*stop))
-        )
-    )
-    prov = F.min(
-        F.struct(F.col("pos").alias("src_offset"), F.col("seg_idx").alias("src_seg_idx"))
-    ).alias("prov")
-    return (
-        exploded.groupBy(
-            "conv_id", "turn_idx", "kind", "subj", "pred", "obj",
-            "mention", "mention_kind", "target", "alias",
-        )
-        .agg(prov)
-        .select(
-            "conv_id", "turn_idx", "kind", "subj", "pred", "obj",
-            "mention", "mention_kind", "target", "alias",
-            F.col("prov.src_offset").alias("src_offset"),
-            F.col("prov.src_seg_idx").alias("src_seg_idx"),
-        )
-    )
-
-
-def split_extracted(combined: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """extract_all output → (triples, standalone_mentions, alias_bindings)
-    with each family's canonical schema. The filters run over the already-
-    deduped (fact-sized, post-shuffle) table — splitting is free."""
-    triples = combined.filter(F.col("kind") == "triple").select(
-        "conv_id", "turn_idx", "subj", "pred", "obj", "src_offset", "src_seg_idx"
-    )
-    mentions = combined.filter(F.col("kind") == "mention").select(
-        "conv_id", "turn_idx", "mention", "mention_kind"
-    )
-    bindings = combined.filter(F.col("kind") == "binding").select(
-        "conv_id", "turn_idx", "target", "alias"
-    )
-    return triples, mentions, bindings
 
 
 def extract_mentions(triples: DataFrame) -> DataFrame:

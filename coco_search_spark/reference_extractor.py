@@ -8,16 +8,19 @@ text → list[DependencyEdge]), and like them it is deterministic and
 side-effect free so tests are hermetic.
 
 Extraction grammar (closed predicate vocabulary, models.py:13-18 analog),
-three sentence forms, whitespace-tolerant (``\\s+`` between words):
+four sentence forms, whitespace-tolerant (``\\s+`` between words):
 
     <ident> <relation-phrase> <ident>               (active)
+    <ident> <relation-phrase> <ident> and <ident>   (conjunction — two triples)
     <ident> is <passive-phrase> by <ident>          (passive — swapped)
     <ident> , which <relation-phrase> <ident>       (appositive)
 
 where <identifier> matches ``[A-Za-z_][A-Za-z0-9_]*`` (the reference's
 identifier pattern, src/cocosearch/indexer/tsvector.py:103) and the phrases
-come from RELATIONS / PASSIVE_OF in fixtures.py. Function words
-(which/is/by) are excluded as subjects/objects. Duplicate triples within a
+come from RELATIONS / PASSIVE_OF in fixtures.py. Stop words
+(which/is/by/and/never/not, ``_STOP``) are excluded as subjects/objects;
+this also IS the negation rule: "A never uses B" can only match the active
+form with subj="never", so it yields nothing. Duplicate triples within a
 turn are deduplicated — the analog of the reference's
 ``_deduplicate_edges`` (src/cocosearch/deps/extractor.py:181-203).
 """

@@ -66,23 +66,19 @@ def run_streaming_pipeline(
         # at-least-once) replaces its own output instead of appending
         # duplicates — this plus the checkpointed source offsets gives
         # effectively-once into the sink. Readers see batch_id as a
-        # partition column of {out_dir}/triples_stream.
-        (
-            triples.write.mode("overwrite")
-            .parquet(f"{out_dir}/triples_stream/batch_id={batch_id}")
-        )
-        (
-            mentions.write.mode("overwrite")
-            .parquet(f"{out_dir}/mentions_stream/batch_id={batch_id}")
-        )
-        # full batch-parity: alias-binding evidence must survive streaming
-        # too (ADVICE r3 — dropping it silently weakened downstream
-        # canonicalization merges for streamed conversations)
-        (
-            bindings.write.mode("overwrite")
-            .parquet(f"{out_dir}/bindings_stream/batch_id={batch_id}")
-        )
-        combined.unpersist()
+        # partition column of {out_dir}/triples_stream. Full batch-parity:
+        # alias-binding evidence must survive streaming too (ADVICE r3 —
+        # dropping it silently weakened downstream canonicalization merges
+        # for streamed conversations). The cache is released in finally, so
+        # a failing sink write does not leave the batch cached.
+        sinks = {"triples": triples, "mentions": mentions, "bindings": bindings}
+        try:
+            for name, df in sinks.items():
+                df.write.mode("overwrite").parquet(
+                    f"{out_dir}/{name}_stream/batch_id={batch_id}"
+                )
+        finally:
+            combined.unpersist()
 
     writer = stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

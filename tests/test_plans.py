@@ -80,20 +80,37 @@ def test_star_join_broadcasts_dimensions(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_extraction_single_shuffle(spark):
+# entry point → (needs start_char offsets, regexp_extract_all count,
+# dedup aggregate): one full-text regex scan per grammar form — 4 triple
+# forms, 2 mention markers, 1 alias binding; the distinct is a
+# HashAggregate, the provenance min(struct) a SortAggregate
+_EXTRACTION_PLANS = {
+    "extract_triples": (False, 4, "HashAggregate"),
+    "extract_triples_prov": (True, 4, "SortAggregate"),
+    "extract_standalone_mentions": (False, 2, "HashAggregate"),
+    "extract_alias_bindings": (False, 1, "HashAggregate"),
+    "extract_all": (True, 7, "SortAggregate"),
+}
+
+
+@pytest.mark.parametrize("entry", list(_EXTRACTION_PLANS))
+def test_extraction_single_shuffle(spark, entry):
     from coco_search_spark.entry_queries import derived_transcripts
-    from coco_search_spark.operators.extract import extract_triples
+    from coco_search_spark.operators import extract
     from coco_search_spark.operators.segments import segment_turns
 
-    df = extract_triples(segment_turns(derived_transcripts(spark, SF)))
-    plan = _formatted(df)
-    # exactly one Exchange (the dedup), with a partial HashAggregate below it
+    offsets, n_regex, aggregate = _EXTRACTION_PLANS[entry]
+    segs = segment_turns(derived_transcripts(spark, SF), with_offsets=offsets)
+    plan = _formatted(getattr(extract, entry)(segs))
+    assert plan.count("regexp_extract_all(") == n_regex, plan
+    # exactly one Exchange (the dedup), with a partial aggregate below it
     n_exchanges = sum(
         1 for ln in plan.splitlines() if ln.strip().startswith("(") and ") Exchange" in ln
     )
     assert n_exchanges == 1, plan
-    assert "HashAggregate" in plan
+    assert aggregate in plan
     assert "Generate" in plan  # the two explodes
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_linking_occurrence_join_is_broadcast(spark, fx):

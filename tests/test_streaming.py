@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from coco_search_spark import fixtures
@@ -68,6 +70,22 @@ def test_streaming_resume_no_duplicates(spark, fx, tmp_path):
     q2.awaitTermination(120)
     n2 = spark.read.parquet(f"{out}/triples_stream").count()
     assert n1 == n2 > 0
+
+
+def test_failed_sink_write_releases_batch_cache(spark, fx, tmp_path):
+    """A sink write that raises mid-batch terminates the query with the
+    error and still releases the batch's cached fact table."""
+    src = str(tmp_path / "src")
+    out = tmp_path / "out"
+    _write_fixture(spark, fx, src)
+    out.mkdir()
+    # a plain file where the mentions sink needs a directory: its write raises
+    (out / "mentions_stream").write_text("")
+    spark.catalog.clearCache()
+    q = run_streaming_pipeline(spark, src, str(out), str(tmp_path / "ckpt"))
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_turn_rate_metrics_stream(spark, fx, tmp_path):

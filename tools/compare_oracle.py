@@ -27,6 +27,9 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main(sf_dir: str, only: list[str] | None = None) -> int:
+    # bound the driver heap like tests/conftest.py: the session default
+    # (48g) lets a full run's JVM grow past a small host's memory
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "12g")
     spark = get_spark(8, shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
