@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from coco_search_spark.functions.text import normalize_name_col, portable_hash_col
+from coco_search_spark.session import jvm_key
 
 N_HASHES = 12
 N_BANDS = 4          # 4 bands × 3 rows
@@ -167,8 +168,9 @@ def connected_components(
 
     Raises RuntimeError if the cap is hit before the fixpoint — a silently
     split component is a correctness bug, not a degraded answer.
-    localCheckpoint each round cuts the lineage (mandatory for iterative
-    DataFrame algorithms — SURVEY §7.3)."""
+    Each round's labels are locally checkpointed, so every round's plan
+    starts from data and its size does not grow with the round count
+    (mandatory for iterative DataFrame algorithms — SURVEY §7.3)."""
     # materialize the (possibly expensive) edge DAG ONCE — the loop must
     # never re-run the upstream LSH self-join per iteration
     sym = (
@@ -204,9 +206,8 @@ def connected_components(
             F.coalesce(F.col("_ll"), labels.component) if double else labels.component,
             F.coalesce(F.col("nbr_component"), labels.component),
         )
-        # ONE job per iteration: persist the new labels and piggyback the
-        # convergence check on the same action (cache-on-first-use), then
-        # release the previous generation
+        # ONE action per iteration: persist the new labels and piggyback
+        # the convergence check on it (cache-on-first-use)
         new_labels = (
             base.join(neighbor_min, labels.surface == neighbor_min.src, "left")
             .select(
@@ -217,12 +218,16 @@ def connected_components(
             .persist()
         )
         changed = new_labels.agg(F.sum("changed")).collect()[0][0] or 0
+        # cut the plan: the next round starts from the cached data, not
+        # from this round's plan (three references to the previous
+        # generation, so the plan would grow ~3.4x per round). The lazy
+        # checkpoint plans no exchange and runs no job of its own; it is
+        # filled from the cache by the next round's job, after which the
+        # previous generation's cache is released
+        labels = new_labels.select("surface", "component").localCheckpoint(eager=False)
         if prev_gen is not None:
             prev_gen.unpersist()
         prev_gen = new_labels
-        # the persisted parent caches the data, so the growing logical plan
-        # above it costs analysis time only (bounded by max_iterations)
-        labels = new_labels.select("surface", "component")
         if changed == 0:
             break
     if changed != 0:
@@ -335,7 +340,7 @@ _ISO_SESSIONS: dict[str, object] = {}
 # "SET" lists every explicitly-set runtime conf; immutable/static entries
 # are skipped via try/except.
 def _isolated_session(spark):
-    key = spark.sparkContext.applicationId
+    key = jvm_key(spark)
     with _CANON_SEQ_LOCK:
         iso = _ISO_SESSIONS.get(key)
         if iso is None:

@@ -30,7 +30,7 @@ the appositive tail "which <phrase> obj" would otherwise also match the
 active form with subj="which" (the stop-filter is the cross-form
 disambiguation rule, applied identically in every implementation).
 
-One compiler, ``_compile(families)``, is the only code that turns the
+One compiler, ``_compile(spark, families)``, is the only code that turns the
 grammar tables (``GRAMMAR``, ``MENTION_GRAMMAR``, ``ALIAS_BINDING_RE``) into
 Spark Columns: one ``array<struct<kind, subj, pred, obj, m, mention,
 mention_kind, target, alias>>`` per family selection, pure Catalyst
@@ -64,6 +64,7 @@ from pyspark.sql import functions as F
 
 from coco_search_spark.fixtures import PASSIVE_OF, RELATIONS
 from coco_search_spark.functions.text import IDENT_RE
+from coco_search_spark.session import jvm_key
 
 
 def _ws_alt(phrases: list[str]) -> str:
@@ -205,22 +206,14 @@ EXTRACT_KINDS = ("triple", "mention", "binding")
 _FACT_FIELDS = ("subj", "pred", "obj", "m", "mention", "mention_kind", "target", "alias")
 _ENTITY_FIELDS = ("subj", "obj", "mention", "target", "alias")
 
-# Memo for the compiled grammar Columns, keyed on the family tuple. Building
-# one costs ~0.6-0.9 s of DRIVER time (hundreds of py4j round-trips
-# marshalling the regex alternations into Catalyst expression objects) and
-# the result is an immutable unresolved expression — independent of
-# DataFrame and session, valid for the lifetime of the gateway JVM (one per
-# Python process). Without it the build cost was paid on EVERY pipeline
+# Memo for the compiled grammar Columns, keyed on the JVM identity and the
+# family tuple. Building one costs ~0.6-0.9 s of DRIVER time (hundreds of
+# py4j round-trips marshalling the regex alternations into Catalyst
+# expression objects) and the result is an immutable unresolved expression,
+# independent of DataFrame and session but bound to the gateway JVM its
+# py4j refs live in. Without it the build cost was paid on EVERY pipeline
 # run, warm runs included, where it was a measurable slice of the floor.
 _COL_CACHE: dict = {}
-
-
-def _cached_col(key, builder):
-    col = _COL_CACHE.get(key)
-    if col is None:
-        col = builder()
-        _COL_CACHE[key] = col
-    return col
 
 
 def _fact(kind: str, **fields: Column) -> Column:
@@ -284,17 +277,24 @@ def _family_arrays(families: tuple[str, ...]) -> Iterator[Column]:
         )
 
 
-def _compile(families: tuple[str, ...]) -> Column:
+def _compile(spark, families: tuple[str, ...]) -> Column:
     """The grammar compiler: ``array<struct<kind, subj, pred, obj, m,
     mention, mention_kind, target, alias>>`` of every fact the selected
-    families find in ``seg_text``, memoised per family tuple."""
-    return _cached_col(families, lambda: F.concat(*_family_arrays(families)))
+    families find in ``seg_text``, memoised per JVM and family tuple."""
+    key = (jvm_key(spark), families)
+    col = _COL_CACHE.get(key)
+    if col is None:
+        # Columns of an earlier JVM hold dead py4j refs: drop them
+        for stale in [k for k in list(_COL_CACHE) if k[0] != key[0]]:
+            _COL_CACHE.pop(stale, None)
+        col = _COL_CACHE[key] = F.concat(*_family_arrays(families))
+    return col
 
 
 def _explode_facts(segments: DataFrame, families: tuple[str, ...], *keep: str) -> DataFrame:
     """One row per compiled fact (``keep`` columns + the struct fields),
     after THE stop filter: no entity field may be a stop ident."""
-    facts = segments.select(*keep, F.explode(_compile(families)).alias("t"))
+    facts = segments.select(*keep, F.explode(_compile(segments.sparkSession, families)).alias("t"))
     not_stop = [
         F.col(f).isNull() | ~F.col(f).isin(*STOP_IDENTS) for f in _ENTITY_FIELDS
     ]

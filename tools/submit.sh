@@ -7,7 +7,7 @@ set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 cd "$REPO"
 
-ZIP=/tmp/coco_search_spark.zip
+ZIP="${TMPDIR:-/tmp}/coco_search_spark.zip"
 rm -f "$ZIP"
 python -c "
 import shutil, zipfile, os
@@ -22,13 +22,20 @@ print('packaged', '$ZIP')
 "
 
 CPUS="${SPARK_GRAFT_CPUS:-32}"
+# the session settings come from coco_search_spark.session.SESSION_CONF,
+# the dict get_spark applies, so both entry points run the same session
+CONF_LINES="$(python -c "
+import sys
+from coco_search_spark.session import SESSION_CONF
+conf = {**SESSION_CONF, 'spark.sql.shuffle.partitions': sys.argv[1]}
+for k, v in conf.items():
+    print('--conf')
+    print(f'{k}={v}')
+" "$CPUS")"
+mapfile -t CONF <<<"$CONF_LINES"
 exec spark-submit \
   --master "local[$CPUS]" \
-  --conf spark.sql.shuffle.partitions="$CPUS" \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.adaptive.skewJoin.enabled=true \
-  --conf spark.sql.execution.arrow.pyspark.enabled=true \
-  --conf spark.driver.memory="${SPARK_GRAFT_DRIVER_MEM:-48g}" \
-  --conf spark.driver.extraJavaOptions=-XX:+UseParallelGC \
+  --driver-memory "${SPARK_GRAFT_DRIVER_MEM:-48g}" \
+  "${CONF[@]}" \
   --py-files "$ZIP" \
   tools/submit_job.py "$@"
