@@ -38,8 +38,6 @@ class EngineConfig:
     n_bands: int = 4
     jaccard_threshold: float = 0.6
     max_cc_iterations: int = 20
-    # materialization skew defense
-    salt_buckets: int = 16
     # OPERATIONAL knobs (affect performance/layout, never results —
     # excluded from the config identity so tuning them can't trigger a
     # spurious full re-extract on resume)
@@ -59,7 +57,6 @@ class EngineConfig:
         "n_hashes",
         "n_bands",
         "max_cc_iterations",
-        "salt_buckets",
         "compact_parts_after",
         "broadcast_surface_limit",
     )

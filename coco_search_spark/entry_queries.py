@@ -1309,7 +1309,7 @@ def q_kg_link_mentions(spark, sf_dir):
     """Hybrid RRF entity linking (the flagship stage), oracle-checked value
     for value: each distinct mention surface is linked against a catalog
     whose aliases are the snake/camel/Pascal variants of every ground-truth
-    entity, using the expr embedder (double-precision sha256-byte cosine,
+    entity, using the double-precision sha256-byte cosine (`embed_expr`,
     DuckDB-replicable) for the vector leg, token-Jaccard for the keyword
     leg, RRF fusion with exact-norm boost, deterministic tie-breaks. The
     DuckDB oracle replays the entire pipeline: candidate generation by
@@ -1320,7 +1320,7 @@ def q_kg_link_mentions(spark, sf_dir):
     surf, catalog = _surfaces_and_catalog(spark, sf_dir)
     mentions = surf.select(F.col("surface").alias("mention"))
     return (
-        link_surfaces(mentions, catalog, embedder="expr")
+        link_surfaces(mentions, catalog)
         .orderBy("mention")
     )
 
@@ -1334,7 +1334,7 @@ def q_kg_link_topn(spark, sf_dir):
     surf, catalog = _surfaces_and_catalog(spark, sf_dir)
     mentions = surf.select(F.col("surface").alias("mention"))
     return (
-        link_surfaces_topn(mentions, catalog, top_n=3, embedder="expr")
+        link_surfaces_topn(mentions, catalog, top_n=3)
         .orderBy("mention", "link_rank")
     )
 
@@ -1354,7 +1354,7 @@ def q_kg_link_analyze(spark, sf_dir):
     surf, catalog = _surfaces_and_catalog(spark, sf_dir)
     mentions = surf.select(F.col("surface").alias("mention"))
     return (
-        link_surfaces_analyze(mentions, catalog, embedder="expr", min_score=0.02)
+        link_surfaces_analyze(mentions, catalog, min_score=0.02)
         .orderBy("mention", "link_rank")
     )
 
@@ -1380,10 +1380,10 @@ def q_kg_link_delta(spark, sf_dir):
         F.pmod(portable_hash_col(F.col("mention")), F.lit(3)) != 0
     )
     prev_links = prev_vocab.join(
-        link_surfaces(prev_vocab, catalog, embedder="expr"), "mention", "left"
+        link_surfaces(prev_vocab, catalog), "mention", "left"
     )
     to_link, reusable = split_link_work(mentions, prev_links)
-    fresh = link_surfaces(to_link, catalog, embedder="expr")
+    fresh = link_surfaces(to_link, catalog)
     merged = merge_links(fresh, reusable.filter(F.col("entity_id").isNotNull()))
     return (
         merged.join(
@@ -1711,7 +1711,7 @@ def q_kg_link_defboost(spark, sf_dir):
         )
         .distinct()
     )
-    return link_surfaces(mentions, catalog, embedder="expr").orderBy("mention")
+    return link_surfaces(mentions, catalog).orderBy("mention")
 
 
 def q_kg_canonicalize(spark, sf_dir):

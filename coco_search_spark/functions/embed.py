@@ -5,13 +5,17 @@ embedding stage (reference: src/cocosearch/indexer/embedder.py:166-195
 batches ≤128 texts per RPC) using the reference's own hermetic test
 embedding — sha256 bytes cycled into the vector, values in [-1, 1]
 (reference: tests/mocks/ollama.py:10-38) — so ranking tests are reproducible
-with zero model dependency. Swap ``embed_pandas_udf`` for a real
-``predict_batch_udf`` model at deploy time; the plan shape is identical.
+with zero model dependency.
 
-Cosine comes in two forms:
-- ``cosine_expr``: pure Catalyst (zip_with + aggregate) — oracle-checkable
-  in DuckDB (list_cosine_similarity) and JVM-side.
-- ``cosine_pandas_udf``: numpy over Arrow batches for the linking hot path.
+Two forms of the same embedding:
+- ``make_embed_udf``: float32 over Arrow batches — the chunk-embedding
+  stage, and the swap point for a real ``predict_batch_udf`` model at
+  deploy time (the plan shape is identical).
+- ``embed_expr``: double precision, pure Catalyst — the linker's vector
+  leg, oracle-checkable in DuckDB.
+
+``cosine_expr`` is the one cosine: pure Catalyst (zip_with + aggregate),
+JVM-side and oracle-checkable (DuckDB list_cosine_similarity).
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, FloatType
+from pyspark.sql.types import ArrayType, FloatType
 
 DEFAULT_DIM = 64
 
@@ -114,18 +118,6 @@ def cosine_expr(a: Column, b: Column, scale: int | None = None) -> Column:
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
     sim = F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot / (na * nb))
     return F.round(sim, scale) if scale is not None else sim
-
-
-@F.pandas_udf(DoubleType())
-def cosine_pandas_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized cosine over Arrow batches for the scoring hot path."""
-    am = np.stack(a.to_numpy())
-    bm = np.stack(b.to_numpy())
-    dots = np.einsum("ij,ij->i", am, bm)
-    norms = np.linalg.norm(am, axis=1) * np.linalg.norm(bm, axis=1)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sims = np.where(norms == 0, 0.0, dots / norms)
-    return pd.Series(sims)
 
 
 def py_cosine(a, b) -> float:

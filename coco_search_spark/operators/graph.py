@@ -3,8 +3,6 @@
 Re-expresses the reference's dependency-graph query layer
 (reference: src/cocosearch/deps/query.py):
 
-- forward / reverse neighbor lookup  (get_dependencies :52-102,
-  get_dependents :105-155) → partition-pruned filters;
 - transitive BFS with visited-set cycle exclusion and depth cap
   (get_dependency_tree :179-243, get_impact :246-293, batch variants
   :296-421) → iterative frontier ⋈ edges joins with ``left_anti`` against
@@ -24,20 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MAX_DEPTH = 5  # reference default depth cap, deps/query.py:179-243
-
-
-def forward_edges(edges: DataFrame, subj_id: str, pred: str | None = None) -> DataFrame:
-    out = edges.filter(F.col("subj_id") == subj_id)
-    if pred is not None:
-        out = out.filter(F.col("pred") == pred)
-    return out
-
-
-def reverse_edges(edges: DataFrame, obj_id: str, pred: str | None = None) -> DataFrame:
-    out = edges.filter(F.col("obj_id") == obj_id)
-    if pred is not None:
-        out = out.filter(F.col("pred") == pred)
-    return out
 
 
 def transitive_closure(

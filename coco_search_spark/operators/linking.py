@@ -5,8 +5,10 @@ The Spark re-expression of the reference's two retrieval legs and fusion:
 - candidate generation = the resolver's module→file index probe
   (reference: src/cocosearch/deps/resolver.py:109-142 build_index/resolve)
   as a **broadcast hash join** from mention tokens to an alias-token index;
-- vector leg = pgvector cosine top-k (hybrid.py:263-275) as an Arrow-batched
-  cosine + ``row_number`` window rank;
+- vector leg = pgvector cosine top-k (hybrid.py:263-275) as a Catalyst
+  ``embed_expr``/``cosine_expr`` cosine + ``row_number`` window rank — no
+  Python worker on this vocabulary-sized path, and the same expression the
+  DuckDB oracle reproduces;
 - keyword leg = ts_rank top-k (hybrid.py:169-186) as token-set Jaccard +
   window rank;
 - fusion = Reciprocal Rank Fusion, score = Σ 1/(k + rank), k = 60
@@ -33,12 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from coco_search_spark.functions.embed import (
-    cosine_expr,
-    cosine_pandas_udf,
-    embed_expr,
-    make_embed_udf,
-)
+from coco_search_spark.functions.embed import cosine_expr, embed_expr
 from coco_search_spark.functions.text import normalize_name_col
 
 RRF_K = 60                      # hybrid.py:29
@@ -79,7 +76,6 @@ def _ranked_candidates(
     embed_dim: int,
     prefetch: int,
     rrf_k: int,
-    embedder: str,
     boost: float,
 ) -> DataFrame:
     """Shared core of link_surfaces / link_surfaces_analyze: every candidate
@@ -114,21 +110,12 @@ def _ranked_candidates(
     # ---- vector leg similarity per (mention, alias) pair; both ends are
     # embedded ONCE per distinct string and attached by broadcast join —
     # the pair table repeats strings many times over
-    if embedder == "expr":
-        vec_sim = cosine_expr(F.col("m_vec"), F.col("a_vec"))
-        m_vecs = surfaces.select(
-            "mention", embed_expr(F.col("mention"), embed_dim).alias("m_vec")
-        )
-        a_vecs = catalog.select("alias").distinct().select(
-            "alias", embed_expr(F.col("alias"), embed_dim).alias("a_vec")
-        )
-    else:
-        embed = make_embed_udf(embed_dim)
-        vec_sim = cosine_pandas_udf(F.col("m_vec"), F.col("a_vec"))
-        m_vecs = surfaces.select("mention", embed(F.col("mention")).alias("m_vec"))
-        a_vecs = catalog.select("alias").distinct().select(
-            "alias", embed(F.col("alias")).alias("a_vec")
-        )
+    m_vecs = surfaces.select(
+        "mention", embed_expr(F.col("mention"), embed_dim).alias("m_vec")
+    )
+    a_vecs = catalog.select("alias").distinct().select(
+        "alias", embed_expr(F.col("alias"), embed_dim).alias("a_vec")
+    )
 
     # no forced broadcast on the vector tables: m_vecs is one row per
     # distinct surface WITH an embed_dim-float vector — at SCALE.md's
@@ -137,7 +124,7 @@ def _ranked_candidates(
     scored_pair = (
         cand.join(m_vecs, "mention")
         .join(a_vecs, "alias")
-        .withColumn("vec_sim", vec_sim)
+        .withColumn("vec_sim", cosine_expr(F.col("m_vec"), F.col("a_vec")))
         .drop("m_vec", "a_vec")
         .withColumn(
             "kw_sim",
@@ -240,7 +227,6 @@ def link_surfaces(
     prefetch: int = MAX_PREFETCH,
     rrf_k: int = RRF_K,
     min_score: float = 0.0,
-    embedder: str = "udf",
     top_n: int = 1,
     boost: float = EXACT_MATCH_BOOST,
 ) -> DataFrame:
@@ -250,17 +236,15 @@ def link_surfaces(
     links identically, and the distinct-surface table is vocabulary-sized —
     occurrences get their link via a broadcast join (link_mentions).
 
-    embedder: "udf" (default) scores the vector leg with the Arrow-batched
-    float32 pipeline embedder; "expr" uses the pure-Catalyst double-precision
-    ``embed_expr``/``cosine_expr`` form, whose scores a DuckDB oracle can
-    reproduce value for value. Each distinct mention/alias string is
-    embedded exactly once (not once per candidate pair) and joined onto the
-    pair table."""
+    The vector leg is the double-precision Catalyst ``embed_expr``/
+    ``cosine_expr`` form, whose scores a DuckDB oracle reproduces value for
+    value. Each distinct mention/alias string is embedded exactly once (not
+    once per candidate pair) and joined onto the pair table."""
     from coco_search_spark.ops.globs import require_positive
 
     require_positive(embed_dim=embed_dim, prefetch=prefetch, rrf_k=rrf_k, top_n=top_n)
     ranked = _ranked_candidates(
-        surfaces, catalog, embed_dim, prefetch, rrf_k, embedder, boost
+        surfaces, catalog, embed_dim, prefetch, rrf_k, boost
     ).filter(F.col("link_score") >= min_score)
     if top_n == 1:
         return ranked.filter(F.col("link_rank") == 1).select(
@@ -278,7 +262,6 @@ def link_surfaces_analyze(
     prefetch: int = MAX_PREFETCH,
     rrf_k: int = RRF_K,
     min_score: float = 0.0,
-    embedder: str = "udf",
     boost: float = EXACT_MATCH_BOOST,
 ) -> DataFrame:
     """Per-stage linking diagnostics — the analog of the reference's
@@ -300,7 +283,7 @@ def link_surfaces_analyze(
 
     require_positive(embed_dim=embed_dim, prefetch=prefetch, rrf_k=rrf_k)
     ranked = _ranked_candidates(
-        surfaces, catalog, embed_dim, prefetch, rrf_k, embedder, boost
+        surfaces, catalog, embed_dim, prefetch, rrf_k, boost
     )
     passed = F.col("link_score") >= min_score
     return ranked.select(

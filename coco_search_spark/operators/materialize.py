@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_SALT_BUCKETS = 16
+SALT_BUCKETS = 16
 
 
 def resolve_edges(
@@ -68,43 +68,19 @@ def resolve_edges(
     )
 
 
-def salted_degree(
-    edges: DataFrame,
-    key: str = "subj_id",
-) -> DataFrame:
-    """Degree/count metrics per entity: (entity_id, degree, n_convs_approx).
-
-    Both aggregates combine map-side (count partials sum; HLL sketches
-    merge), so hot keys are collapsed per map task before the exchange —
-    no salt needed or wanted. Round 1 summed per-salt
-    ``approx_count_distinct`` partials, which overcounts (the same conv_id
-    appears in several salt buckets); a single unsalted HLL is both correct
-    within rsd and skew-immune."""
-    return (
-        edges.filter(F.col(key).isNotNull())
-        .groupBy(key)
-        .agg(
-            F.count(F.lit(1)).alias("degree"),
-            F.approx_count_distinct("conv_id").alias("n_convs_approx"),
-        )
-        .withColumnRenamed(key, "entity_id")
-    )
-
-
 def salted_distinct_count(
     df: DataFrame,
     key: str,
     value: str,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
 ) -> DataFrame:
     """EXACT distinct-value count per key, hot-key safe: exact countDistinct
     does not combine map-side (the reducer owning a hot key sees every raw
     row), so phase 1 dedups (key, salt, value) under a salted shuffle —
-    spreading the hot key over ``salt_buckets`` tasks — and phase 2 sums the
+    spreading the hot key over ``SALT_BUCKETS`` tasks — and phase 2 sums the
     per-salt distinct counts, which is exact because the salt is derived
     from the value (each distinct value lands in exactly one bucket)."""
     salted = df.filter(F.col(key).isNotNull()).withColumn(
-        "salt", F.pmod(F.xxhash64(F.col(value)), F.lit(salt_buckets))
+        "salt", F.pmod(F.xxhash64(F.col(value)), F.lit(SALT_BUCKETS))
     )
     partial = salted.groupBy(key, "salt").agg(F.countDistinct(value).alias("d"))
     return partial.groupBy(key).agg(F.sum("d").alias(f"n_distinct_{value}"))

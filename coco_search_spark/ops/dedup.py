@@ -1,10 +1,8 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five families, all DataFrame-first, all deterministic (portable md5-based
+Four families, all DataFrame-first, all deterministic (portable md5-based
 hashing so every intermediate is DuckDB-oracle-checkable):
 
-- exact:       sha256 groupBy (the reference's content-hash identity,
-               flow.py:348-351, generalized from change detection to dedup)
 - minhash+LSH: word-shingle MinHash signatures → banded buckets →
                bucket-join candidates → exact-Jaccard verification
 - simhash:     64-bit sign-aggregated token hash; near-dups = small
@@ -29,18 +27,6 @@ from coco_search_spark.functions.embed import cosine_expr
 from coco_search_spark.functions.text import portable_hash_col
 from coco_search_spark.ops.globs import require_fraction as _require_fraction
 from coco_search_spark.ops.globs import require_positive as _require_positive
-
-# ------------------------------------------------------------------ exact
-
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(group_hash, n_dups, ids): groups of byte-identical texts."""
-    h = df.select(F.col(id_col).alias("id"), F.sha2(F.col(text_col), 256).alias("group_hash"))
-    return (
-        h.groupBy("group_hash")
-        .agg(F.count(F.lit(1)).alias("n_dups"), F.sort_array(F.collect_list("id")).alias("ids"))
-        .filter(F.col("n_dups") > 1)
-    )
-
 
 # ------------------------------------------------------------- shingling
 

@@ -14,8 +14,8 @@ reproduces it value for value.
 - ``stratified_cap``: EXACT per-stratum cap, smallest-hash-first (a
   deterministic uniform draw). Scale-safe two-phase: phase 1 ranks within
   (stratum, salt) and keeps ``n`` per salt bucket — a hot stratum spreads
-  over ``salt_buckets`` tasks instead of pinning one — and phase 2 ranks
-  the ≤ salt_buckets×n survivors per stratum, which is cap-bounded, not
+  over ``SALT_BUCKETS`` tasks instead of pinning one — and phase 2 ranks
+  the ≤ SALT_BUCKETS×n survivors per stratum, which is cap-bounded, not
   data-bounded. Same pattern as similarity.per_query_topk (SCALE.md skew
   section).
 """
@@ -29,6 +29,7 @@ from coco_search_spark.functions.text import portable_hash_col
 from coco_search_spark.ops.globs import require_positive
 
 SAMPLE_DENOMINATOR = 10_000
+SALT_BUCKETS = 16
 
 
 def hash_sample(
@@ -59,19 +60,18 @@ def stratified_cap(
     id_col: str,
     n_per_stratum: int,
     seed: str = "",
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """At most ``n_per_stratum`` rows per stratum, chosen smallest-hash
     first (ties broken by id) — an exact, reproducible uniform draw per
     stratum. Two-phase ranking so one gigantic stratum cannot pin a single
     task (the per-stratum window would otherwise sort the whole stratum on
     one reducer)."""
-    require_positive(n_per_stratum=n_per_stratum, salt_buckets=salt_buckets)
+    require_positive(n_per_stratum=n_per_stratum)
     h = portable_hash_col(
         F.concat(F.lit(seed), F.lit("|"), F.col(id_col).cast("string"))
     )
     salted = df.withColumn("_h", h).withColumn(
-        "_salt", F.pmod(F.col("_h"), F.lit(salt_buckets))
+        "_salt", F.pmod(F.col("_h"), F.lit(SALT_BUCKETS))
     )
     w1 = Window.partitionBy(stratum_col, "_salt").orderBy(
         F.asc("_h"), F.asc(id_col)

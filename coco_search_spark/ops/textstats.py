@@ -1,5 +1,5 @@
-"""Text analysis operators: language-ID, quality scoring, token counting,
-document fingerprinting.
+"""Text analysis operators: language-ID, quality filtering, document
+fingerprinting, contamination and repetition statistics.
 
 All pure Catalyst expressions (portable to the DuckDB oracle); the
 tokenization idiom is the reference's tsvector preparation
@@ -24,10 +24,6 @@ STOPWORDS: dict[str, list[str]] = {
     "de": ["der", "die", "und", "das", "ein", "eine", "ist", "in", "zu", "nicht"],
     "zh": ["的", "是", "了", "在", "和", "有", "我", "不", "这", "就"],
 }
-
-# BPE-ish token regex: words, numbers, or single non-space symbols — a
-# deterministic proxy for subword token counting
-BPE_ISH_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
 def words_col(text):
@@ -67,39 +63,6 @@ def language_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def quality_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Length / punctuation / stopword / repetition features + a composite
-    quality score in [0,1]."""
-    text = F.col(text_col)
-    words = words_col(text)
-    n_words = F.size(words)
-    n_chars = F.length(text)
-    distinct_ratio = F.size(F.array_distinct(words)) / n_words.cast("double")
-    punct_ratio = (
-        F.length(F.regexp_replace(text, r"[^.,;:!?]", "")) / n_chars.cast("double")
-    )
-    en_stop = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
-    stop_ratio = F.size(F.filter(words, lambda x: F.array_contains(en_stop, x))) / n_words.cast(
-        "double"
-    )
-    mean_wlen = F.aggregate(words, F.lit(0), lambda a, x: a + F.length(x)) / n_words.cast("double")
-    score = (
-        F.least(n_words / F.lit(100.0), F.lit(1.0)) * 0.25
-        + F.least(distinct_ratio * 2, F.lit(1.0)) * 0.35
-        + (1 - F.least(punct_ratio * 10, F.lit(1.0))) * 0.2
-        + F.least(mean_wlen / F.lit(8.0), F.lit(1.0)) * 0.2
-    )
-    return df.select(
-        F.col(id_col).alias("id"),
-        n_words.alias("n_words"),
-        F.round(distinct_ratio, 6).alias("distinct_ratio"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(mean_wlen, 6).alias("mean_word_len"),
-        F.round(score, 6).alias("quality_score"),
-    )
-
-
 def quality_filter(
     df: DataFrame,
     id_col: str,
@@ -109,9 +72,8 @@ def quality_filter(
     min_mean_wlen: float = 2.0,
     max_mean_wlen: float = 12.0,
 ) -> DataFrame:
-    """The keep/drop GATE a training-data pipeline actually applies (the
-    scoring above is the diagnostic; this is the decision): first failing
-    rule wins, reason ∈ {too_short, too_stoppy, degenerate_words, ok}.
+    """The keep/drop GATE a training-data pipeline actually applies: first
+    failing rule wins, reason ∈ {too_short, too_stoppy, degenerate_words, ok}.
     Pure Catalyst CASE — drop reasons are countable per shard for free."""
     text = F.col(text_col)
     words = words_col(text)
@@ -131,17 +93,6 @@ def quality_filter(
         F.col(id_col).alias("id"),
         reason.alias("drop_reason"),
         (reason == "ok").cast("int").alias("keep"),
-    )
-
-
-def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Whitespace word count + BPE-ish subword-proxy token count + chars."""
-    text = F.col(text_col)
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.size(words_col(text)).alias("n_words"),
-        F.size(F.regexp_extract_all(text, F.lit(BPE_ISH_RE), 0)).alias("n_tokens"),
-        F.length(text).alias("n_chars"),
     )
 
 

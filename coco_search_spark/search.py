@@ -321,22 +321,3 @@ def search_results(
         )
         .orderBy("search_rank")
     )
-
-
-def search_chunks_cached(
-    spark,
-    chunks: DataFrame,
-    query: str,
-    cache,
-    snapshot_id: str,
-    **kwargs,
-) -> tuple[DataFrame, str]:
-    """``search_chunks`` through the two-level QueryResultCache
-    (reference: search/cache.py:160-234): exact sha256 hit, then
-    token-set-embedding cosine ≥ threshold, both scoped to ``snapshot_id``
-    so a new pipeline commit invalidates stale results for free. Returns
-    (result, status ∈ {exact, semantic, miss}); the result always reads
-    from the cached parquet so hit and miss plans are identical."""
-    return cache.get_or_compute(
-        spark, query, snapshot_id, lambda: search_chunks(chunks, query, **kwargs)
-    )

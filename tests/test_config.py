@@ -23,7 +23,6 @@ def test_defaults_mirror_module_constants():
     the config default would silently fork the two surfaces)."""
     from coco_search_spark.operators import canonicalize as cz
     from coco_search_spark.operators import linking as lk
-    from coco_search_spark.operators import materialize as mt
 
     c = EngineConfig()
     assert c.rrf_k == lk.RRF_K
@@ -33,7 +32,6 @@ def test_defaults_mirror_module_constants():
     assert c.n_bands == cz.N_BANDS
     assert c.jaccard_threshold == cz.JACCARD_THRESHOLD
     assert c.max_cc_iterations == cz.MAX_CC_ITERATIONS
-    assert c.salt_buckets == mt.DEFAULT_SALT_BUCKETS
     from coco_search_spark import pipeline as pl
     from coco_search_spark import state as st
 

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from coco_search_spark.functions.embed import (
     cosine_expr,
-    cosine_pandas_udf,
     make_embed_udf,
     py_cosine,
     py_embed,
@@ -120,12 +119,7 @@ def test_cosine_expr_and_udf_agree(spark):
     df = spark.createDataFrame(
         [(a, b), (a, a), ([0.0] * 16, b)], "a array<float>, b array<float>"
     )
-    rows = df.select(
-        cosine_expr(F.col("a"), F.col("b")).alias("ce"),
-        cosine_pandas_udf(F.col("a"), F.col("b")).alias("cu"),
-    ).collect()
-    for r in rows:
-        assert math.isclose(r["ce"], r["cu"], abs_tol=1e-6)
+    rows = df.select(cosine_expr(F.col("a"), F.col("b")).alias("ce")).collect()
     assert math.isclose(rows[1]["ce"], 1.0, abs_tol=1e-6)
     assert rows[2]["ce"] == 0.0  # zero-norm rule (cache.py:98-118)
     assert math.isclose(rows[0]["ce"], py_cosine(a, b), abs_tol=1e-6)

@@ -2,25 +2,11 @@
 
 from __future__ import annotations
 
-from coco_search_spark.operators.graph import (
-    forward_edges,
-    reverse_edges,
-    transitive_closure,
-)
+from coco_search_spark.operators.graph import transitive_closure
 
 
 def _edges(spark, rows):
     return spark.createDataFrame(rows, "subj_id string, pred string, obj_id string")
-
-
-def test_forward_and_reverse(spark):
-    e = _edges(
-        spark,
-        [("a", "calls", "b"), ("a", "uses", "c"), ("b", "calls", "c"), ("x", "calls", "a")],
-    )
-    assert {r["obj_id"] for r in forward_edges(e, "a").collect()} == {"b", "c"}
-    assert {r["obj_id"] for r in forward_edges(e, "a", "calls").collect()} == {"b"}
-    assert {r["subj_id"] for r in reverse_edges(e, "a").collect()} == {"x"}
 
 
 def test_bfs_depth_and_cycles(spark):

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from coco_search_spark.ops.dedup import (
     embedding_near_dup_pairs,
-    exact_duplicates,
     minhash_lsh_pairs,
     simhash_col,
     simhash_pairs,
@@ -16,9 +15,7 @@ from coco_search_spark.ops.similarity import brute_force_topk, lsh_topk, recall_
 from coco_search_spark.ops.textstats import (
     fingerprint_overlap_pairs,
     language_id,
-    quality_scores,
     rolling_fingerprints,
-    token_counts,
 )
 
 DOCS = [
@@ -36,13 +33,6 @@ def docs(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string").cache()
     df.count()
     return df
-
-
-def test_exact_duplicates(spark, docs):
-    groups = exact_duplicates(docs, "doc_id", "text").collect()
-    assert len(groups) == 1
-    assert groups[0]["ids"] == [0, 1]
-    assert groups[0]["n_dups"] == 2
 
 
 def test_minhash_near_dups(spark, docs):
@@ -107,21 +97,6 @@ def test_language_id(spark, docs):
     assert got[5] == "de"
 
 
-def test_quality_scores(spark, docs):
-    rows = {r["id"]: r for r in quality_scores(docs, "doc_id", "text").collect()}
-    for r in rows.values():
-        assert 0.0 <= r["quality_score"] <= 1.0
-        assert 0.0 <= r["punct_ratio"] <= 1.0
-    # doc 0 repeats 'the' 3 times → lower distinct ratio than doc 3
-    assert rows[0]["distinct_ratio"] < rows[3]["distinct_ratio"]
-
-
-def test_token_counts(spark, docs):
-    rows = {r["id"]: r for r in token_counts(docs, "doc_id", "text").collect()}
-    assert rows[0]["n_words"] == len(DOCS[0][1].split())
-    assert rows[0]["n_tokens"] >= rows[0]["n_words"]
-
-
 def test_rolling_fingerprints_overlap(spark, docs):
     fp = {r["id"]: r["fingerprints"] for r in rolling_fingerprints(docs, "doc_id", "text").collect()}
     assert fp[0] == fp[1]
@@ -131,37 +106,6 @@ def test_rolling_fingerprints_overlap(spark, docs):
     }
     assert (0, 1) in pairs
     assert (0, 3) not in pairs
-
-
-def test_multi_index_merge_tolerates_failed_index(spark):
-    """J7 partial-failure tolerance (multi.py:180-192 analog): one broken
-    index is skipped with its error reported; the merge proceeds over the
-    healthy ones; all-failed raises."""
-    import pytest
-
-    from coco_search_spark.ops.multi import (
-        AllIndexesFailedError,
-        merge_ranked_indexes,
-    )
-
-    good = spark.createDataFrame(
-        [(i, float(100 - i)) for i in range(30)], "doc_id long, score double"
-    )
-
-    def broken():
-        raise IOError("index unreachable")
-
-    out, failures = merge_ranked_indexes(
-        {"healthy": lambda: good, "broken": broken}, k=5
-    )
-    rows = out.collect()
-    assert [r["doc_id"] for r in rows] == [0, 1, 2, 3, 4]
-    assert all(r["index_name"] == "healthy" for r in rows)
-    assert failures == [("broken", "index unreachable")]
-    with pytest.raises(AllIndexesFailedError):
-        merge_ranked_indexes({"broken": broken}, k=5)
-    with pytest.raises(IOError):
-        merge_ranked_indexes({"broken": broken}, k=5, on_error="raise")
 
 
 def test_similarity_ivf_recall_and_selfmatch(spark):

@@ -146,40 +146,25 @@ def test_hot_entity_skew_materializes(spark, tmp_path):
 
 
 def test_degree_metrics_exact_and_hll(spark):
-    """salted_degree: the HLL conv count must approximate the EXACT distinct
-    count within its rsd (round 1 summed per-salt sketches, which
-    overcounted); salted_distinct_count must be exactly right even with a
-    hot key."""
-    from coco_search_spark.operators.materialize import (
-        salted_degree,
-        salted_distinct_count,
-    )
+    """salted_distinct_count must be exactly right even with a hot key."""
+    from coco_search_spark.operators.materialize import salted_distinct_count
 
     fxh = fixtures.generate(n_conversations=40, avg_turns=10, seed=11, hot_fraction=0.6)
     sdf = fixtures.transcripts_sdf(spark, fxh)
     res = run_pipeline(spark, sdf)
-    deg = {
-        r["entity_id"]: (r["degree"], r["n_convs_approx"])
-        for r in salted_degree(res.edges, "subj_id").collect()
-    }
     exact = {
-        r["subj_id"]: (r["degree"], r["n_convs"])
+        r["subj_id"]: r["n_convs"]
         for r in res.edges.filter(F.col("subj_id").isNotNull())
         .groupBy("subj_id")
-        .agg(F.count(F.lit(1)).alias("degree"), F.countDistinct("conv_id").alias("n_convs"))
+        .agg(F.countDistinct("conv_id").alias("n_convs"))
         .collect()
     }
-    assert set(deg) == set(exact)
-    for k, (d, acd) in deg.items():
-        assert d == exact[k][0]
-        # approx_count_distinct default rsd = 0.05; allow 3x margin
-        assert abs(acd - exact[k][1]) <= max(2, 0.15 * exact[k][1]), (k, acd, exact[k][1])
     # exact salted two-phase distinct count: bit-for-bit equal to countDistinct
     sdc = {
         r["subj_id"]: r["n_distinct_conv_id"]
         for r in salted_distinct_count(res.edges, "subj_id", "conv_id").collect()
     }
-    assert sdc == {k: v[1] for k, v in exact.items()}
+    assert sdc == exact
 
 
 def test_resume_without_prev_triples_falls_back_to_full(spark, fx, transcripts, tmp_path):

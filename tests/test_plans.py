@@ -129,6 +129,21 @@ def test_linking_occurrence_join_is_broadcast(spark, fx):
     assert "BroadcastHashJoin" in plan, plan
 
 
+def test_no_python_udf_in_linking(spark, fx):
+    """Linking is vocabulary-sized control work: both scoring legs must stay
+    JVM-side (embed_expr + cosine_expr), the same expressions the oracle
+    replays — no Python worker round trip in the plan."""
+    from coco_search_spark import fixtures
+    from coco_search_spark.operators.linking import link_surfaces
+
+    surfaces = spark.createDataFrame(
+        [("paymentGateway",), ("order_store",), ("unknownThing",)], "mention string"
+    )
+    catalog = spark.createDataFrame(fixtures.entity_catalog_pdf(fx.entities))
+    plan = _formatted(link_surfaces(surfaces, catalog))
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
+
+
 def test_resolve_edges_link_map_broadcasts_via_aqe(spark, fx):
     """resolve_edges joins triples to the (vocabulary-sized) link map with
     no forced hint; AQE must broadcast it at fixture scale — and keeps the

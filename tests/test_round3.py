@@ -1,5 +1,5 @@
 """Round-3 feature tests: standalone mentions (X2), block metadata (X3),
-edge provenance, definition boost, schema evolution, staleness, preflight."""
+edge provenance, definition boost, schema evolution, staleness."""
 
 from __future__ import annotations
 
@@ -139,11 +139,11 @@ def test_definition_boost_flips_winner(spark):
     catalog = spark.createDataFrame(
         cat_rows, "entity_id string, alias string, block_type string"
     )
-    best = link_surfaces(mentions, catalog, embedder="expr").collect()[0]
+    best = link_surfaces(mentions, catalog).collect()[0]
     assert best["entity_id"] == "ent_b"
     # without block_type the tie-break picks ent_a (stable entity_id asc)
     catalog_plain = catalog.drop("block_type")
-    base = link_surfaces(mentions, catalog_plain, embedder="expr").collect()[0]
+    base = link_surfaces(mentions, catalog_plain).collect()[0]
     assert base["entity_id"] in ("ent_a", "ent_b")  # scores decide; boost off
     assert base["link_score"] < best["link_score"] or base["entity_id"] != "ent_b"
 
@@ -236,38 +236,6 @@ def test_staleness_none_without_snapshot(tmp_path):
     from coco_search_spark.state import StateStore
 
     assert StateStore(str(tmp_path / "empty")).staleness_seconds() is None
-
-
-# ---------------------------------------------------------------- preflight
-
-def test_preflight_pass_and_fail(spark, tmp_path):
-    from coco_search_spark.preflight import preflight_or_raise, run_preflight
-
-    ok = preflight_or_raise(
-        spark,
-        input_paths=["/root/testdata/sf0.001/documents.parquet"],
-        out_dirs=[str(tmp_path / "out")],
-    )
-    assert all(c["ok"] for c in ok)
-
-    checks = run_preflight(spark, input_paths=["/nonexistent/nope.parquet"])
-    bad = [c for c in checks if not c["ok"]]
-    assert len(bad) == 1 and bad[0]["check"].startswith("input:")
-    with pytest.raises(RuntimeError, match="preflight failed"):
-        preflight_or_raise(spark, input_paths=["/nonexistent/nope.parquet"])
-
-
-# ------------------------------------------------------------- size buckets
-
-def test_size_bucketed_no_eager_count(spark):
-    from coco_search_spark.ops.multimodal import size_bucketed
-
-    df = spark.range(100).select(F.col("id").alias("media_id"))
-    sized = size_bucketed(df, target_mb=1, avg_payload_kb=256, n_rows=100)
-    assert sized.rdd.getNumPartitions() == 100 // 4 + 1
-    # without n_rows: no counting job is launched (plan stays lazy)
-    lazy = size_bucketed(df)
-    assert lazy.count() == 100
 
 
 # ------------------------------------------------- unified one-scan extract

@@ -83,34 +83,6 @@ def test_crash_between_facts_write_and_commit_resumes_cleanly(spark, fx, tmp_pat
     assert snap_after["version"] == 2 and snap_after["facts_path"]
 
 
-def test_preflight_scheme_aware_paths(spark, tmp_path):
-    """file:-prefixed local URIs pass the os-level check; a remote scheme is
-    probed via Hadoop FileSystem instead of os.path (ADVICE r3 — os.path
-    would reject every hdfs://s3a:// URI even when Spark can read it)."""
-    from coco_search_spark.preflight import run_preflight
-
-    local = tmp_path / "in.txt"
-    local.write_text("x")
-    checks = {
-        c["check"]: c
-        for c in run_preflight(
-            spark,
-            input_paths=[f"file://{local}", str(local), f"file://{local}.missing"],
-        )
-    }
-    assert checks[f"input:file://{local}"]["ok"]
-    assert checks[f"input:{local}"]["ok"]
-    assert not checks[f"input:file://{local}.missing"]["ok"]
-    # remote scheme goes through the FileSystem probe: local[?] has the
-    # raw-local and (classpath-dependent) hdfs impls; an unknown bucket on a
-    # connector-less scheme must yield a failure row with a reason — never
-    # an exception, and never the old os.path false-negative message
-    rows = run_preflight(spark, input_paths=["s3a://no-such-bucket/x"])
-    row = [c for c in rows if c["check"].startswith("input:s3a")][0]
-    assert not row["ok"]
-    assert "probe failed" in row["detail"] or "missing on s3a" in row["detail"]
-
-
 def test_canonicalize_isolated_session_cached_and_conf_propagated(spark):
     """ADVICE r3: one isolated session per context (not one leak per call),
     and the caller's runtime SQLConf is visible inside it."""
@@ -209,7 +181,7 @@ def test_weighted_definition_boost_tiers(spark):
     )
     diag = {
         r["entity_id"]: r
-        for r in link_surfaces_analyze(mentions, catalog, embedder="expr").collect()
+        for r in link_surfaces_analyze(mentions, catalog).collect()
     }
     assert diag["ent_fenced"]["boost_applied"] and diag["ent_inline"]["boost_applied"]
     assert not diag["ent_prose"]["boost_applied"]

@@ -121,25 +121,6 @@ def test_vacuum_keeps_inflight_version_dirs(spark, fx, tmp_path):
     assert os.path.exists(inflight)
 
 
-def test_preflight_authority_file_uri(spark, tmp_path):
-    """ADVICE r4: 'file://localhost/abs/path' is a valid local URI (the
-    authority form) — prefix stripping used to mangle it into the relative
-    path 'localhost/abs/path'. Non-local authorities fail explicitly."""
-    from coco_search_spark.preflight import run_preflight
-
-    local = tmp_path / "in.txt"
-    local.write_text("x")
-    uri_auth = f"file://localhost{local}"
-    uri_remote = f"file://otherhost{local}"
-    checks = {
-        c["check"]: c
-        for c in run_preflight(spark, input_paths=[uri_auth, uri_remote])
-    }
-    assert checks[f"input:{uri_auth}"]["ok"]
-    assert not checks[f"input:{uri_remote}"]["ok"]
-    assert "authority" in checks[f"input:{uri_remote}"]["detail"]
-
-
 def _doc_chunks(spark):
     from coco_search_spark.functions.embed import embed_expr
 

@@ -1,12 +1,12 @@
 """Hybrid chunk search (search.py) — the reference's user-facing search
-operation over the chunk relation, plus its two-level result-cache wiring."""
+operation over the chunk relation."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from coco_search_spark.functions.embed import embed_expr
-from coco_search_spark.search import search_chunks, search_chunks_cached
+from coco_search_spark.search import search_chunks
 
 
 def _chunks(spark, rows):
@@ -42,28 +42,6 @@ def test_search_is_partitioning_invariant(spark):
     a = search_chunks(chunks, "shared tok3", k=10).collect()
     b = search_chunks(chunks.repartition(7), "shared tok3", k=10).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
-def test_search_cached_levels_and_snapshot_scope(spark, tmp_path):
-    from coco_search_spark.ops.result_cache import QueryResultCache
-
-    chunks = _chunks(
-        spark,
-        [("c1", "alpha beta gamma"), ("c2", "alpha delta"), ("c3", "zz yy")],
-    )
-    cache = QueryResultCache(str(tmp_path / "qc"))
-    df1, s1 = search_chunks_cached(spark, chunks, "alpha beta", cache, "v1", k=3)
-    assert s1 == "miss" and df1.count() == 3
-    df2, s2 = search_chunks_cached(spark, chunks, "alpha beta", cache, "v1", k=3)
-    assert s2 == "exact"
-    # level 2: token reorder embeds identically (token-SET embedding)
-    _, s3 = search_chunks_cached(spark, chunks, "beta alpha", cache, "v1", k=3)
-    assert s3 in ("exact", "semantic")
-    # a new snapshot must never serve the old result
-    _, s4 = search_chunks_cached(spark, chunks, "alpha beta", cache, "v2", k=3)
-    assert s4 == "miss"
-    # served-from-cache rows equal the computed ones
-    assert sorted(map(tuple, df1.collect())) == sorted(map(tuple, df2.collect()))
 
 
 def test_search_validates_args(spark):

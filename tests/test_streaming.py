@@ -112,47 +112,3 @@ def test_turn_rate_metrics_stream(spark, fx, tmp_path):
     total_rows = len(fx.transcripts)
     emitted = sum(r["n_turns"] for r in rows)
     assert emitted <= total_rows * 3  # sliding windows double-count by design
-
-
-def test_stateful_conversation_progress(spark, fx, tmp_path):
-    """applyInPandasWithState: per-conversation running aggregates across
-    micro-batches; the final update per conversation must equal the batch
-    groupBy truth."""
-    from coco_search_spark.streaming.stateful import (
-        batch_progress_truth,
-        conversation_progress,
-    )
-
-    src = str(tmp_path / "src")
-    _write_fixture(spark, fx, src)
-    stream = stream_transcripts(spark, src)
-    q = (
-        conversation_progress(stream)
-        .writeStream.format("memory")
-        .queryName("conv_progress")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_state"))
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from conv_progress").collect()
-    assert rows, "no stateful updates emitted"
-    # update mode appends one row per (conv, batch) — the final state is the
-    # row with the max n_turns per conversation
-    final = {}
-    for r in rows:
-        if r["conv_id"] not in final or r["n_turns"] > final[r["conv_id"]]["n_turns"]:
-            final[r["conv_id"]] = r
-    truth = {
-        r["conv_id"]: r
-        for r in batch_progress_truth(
-            spark.read.parquet(src)
-        ).collect()
-    }
-    assert set(final) == set(truth)
-    for cid, r in final.items():
-        t = truth[cid]
-        assert (r["n_turns"], r["n_chars"], r["max_turn_idx"]) == (
-            t["n_turns"], t["n_chars"], t["max_turn_idx"]
-        ), cid
