@@ -17,7 +17,7 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # applies them, and tools/submit.sh renders its ``--conf`` flags from this
 # dict, so the two entry points cannot drift apart. Settings that take a
 # parameter or an environment variable (master, shuffle partitions, driver
-# heap and JVM options) stay in the entry points.
+# heap) stay in the entry points.
 SESSION_CONF: dict[str, str] = {
     # AQE: runtime coalesce + skew-join splitting — the reference has no
     # skew handling at all because it is single-process; we inherit Spark's
@@ -48,15 +48,38 @@ SESSION_CONF: dict[str, str] = {
     # warm refresh in a long-lived session (streaming micro-batches, the
     # test suite's one session) re-ran 311-329 Janino compiles and the JVM
     # unloaded 550-700 classes per refresh. At 1,000 entries the second and
-    # later refreshes compile 18-37 classes (new inlined literals and AQE
-    # codegen stage ids) and the unloaded-class count stays flat. A static
-    # conf: it takes effect only in the session that creates the JVM.
+    # later refreshes compile 18-37 classes (new inlined literals) and the
+    # unloaded-class count stays flat. A static conf: it takes effect only
+    # in the session that creates the JVM.
     "spark.sql.codegen.cache.maxEntries": "1000",
+    # Name generated classes without the codegen stage id. AQE numbers
+    # whole-stage subtrees in the order shuffle stages finish, so with the
+    # id in the name an identical stage body missed the cache whenever that
+    # order changed, and a repeated identical build still compiled 8-26
+    # classes. Without it, identical bodies share one cached class.
+    "spark.sql.codegen.useIdInClassName": "false",
     # ParallelGC: measured 10-30x faster than default G1 for this
     # allocation-heavy string/explode workload at 32 executor threads
     # (G1 degraded to 31s on a job ParallelGC runs in 0.9s); throughput
-    # collector is the right choice for batch analytics
-    "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
+    # collector is the right choice for batch analytics.
+    #
+    # The driver's C2 (tier-4) thresholds are 10x the JDK 17 defaults
+    # (5000, 600, 15000). Each index or refresh call starts a fresh JVM, and
+    # at the defaults its C2 threads recompiled Catalyst, AQE and scheduler
+    # code on every call: 12-31 s of compile time per one-file refresh of
+    # the benchmark corpus, against 2-4 s of task CPU. Planner code that
+    # runs a few thousand times per call now stays on C1, while row loops
+    # still reach C2: by call count, and by on-stack replacement, whose
+    # back-edge threshold keeps its default. At 100x the benchmark corpus
+    # (8,000 conversations, 64 files) a build costs 1% more CPU and 8% more
+    # wall than at the defaults, and refreshes 20-25% less CPU; C1 alone
+    # (TieredStopAtLevel=1) made that build 40% slower. The executors keep
+    # the defaults: on a cluster they run no planning, and in local mode
+    # the one JVM is the driver.
+    "spark.driver.extraJavaOptions": (
+        "-XX:+UseParallelGC -XX:Tier4InvocationThreshold=50000"
+        " -XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=150000"
+    ),
     "spark.executor.extraJavaOptions": "-XX:+UseParallelGC",
 }
 
@@ -77,9 +100,6 @@ def get_spark(
         **SESSION_CONF,
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        "spark.driver.extraJavaOptions": os.environ.get(
-            "SPARK_GRAFT_JAVA_OPTS", SESSION_CONF["spark.driver.extraJavaOptions"]
-        ),
         **(extra_conf or {}),
     }
     builder = SparkSession.builder.master(f"local[{cores}]").appName(app_name)
