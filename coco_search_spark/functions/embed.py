@@ -94,15 +94,18 @@ def embed_expr(c: Column, dim: int = DEFAULT_DIM) -> Column:
     ≤ ~6e-8 per component (float32 vs float64 rounding); a parity test
     pins the two together."""
     hexs = F.sha2(F.coalesce(c, F.lit("")), 256)
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(dim)),
-        lambda i: F.conv(
-            hexs.substr(F.pmod(i - 1, F.lit(32)) * 2 + 1, F.lit(2)), 16, 10
-        ).cast("double")
-        / 255.0
-        * 2.0
-        - 1.0,
+    # the 32 digest bytes as hex pairs, scaled, then tiled to ``dim``. The
+    # lambda reads only its own variable: Spark's HigherOrderFunction
+    # canonicalization renumbers lambda variables from 1, so an input
+    # column captured in a lambda body whose exprId is that small (the
+    # first DataFrame of a fresh JVM) drops out of the expression's
+    # references, and constraint inference then pushes a filter on it to
+    # where the column does not exist
+    scaled = F.transform(
+        F.regexp_extract_all(hexs, F.lit("(..)"), 1),
+        lambda h: F.conv(h, 16, 10).cast("double") / 255.0 * 2.0 - 1.0,
     )
+    return F.slice(F.flatten(F.array_repeat(scaled, -(-dim // 32))), 1, dim)
 
 
 def cosine_expr(a: Column, b: Column, scale: int | None = None) -> Column:

@@ -23,7 +23,11 @@ to similarity-blocked clustering:
 
 Scale notes: every join is equi-keyed; bucket keys are salted implicitly by
 band index; AQE skew-join covers hot buckets; signatures are computed in one
-Catalyst projection (no Python).
+Catalyst projection (no Python). The stage runs in the caller's session and
+sets no partition count: AQE sizes every shuffle by bytes, the outputs it
+checkpoints and caches included (``session.SESSION_CONF``), so the
+vocabulary-sized CC rounds run on a few partitions while a corpus-sized
+stage running beside them keeps its parallelism.
 """
 
 from __future__ import annotations
@@ -32,7 +36,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from coco_search_spark.functions.text import normalize_name_col, portable_hash_col
-from coco_search_spark.session import jvm_key
 
 N_HASHES = 12
 N_BANDS = 4          # 4 bands × 3 rows
@@ -254,106 +257,32 @@ def canonicalize_surfaces(
     shingles or tokens at all. Unioned into the LSH/norm edge set before
     connected components.
 
-    The distinct-surface table is vocabulary-sized (orders of magnitude
-    below the corpus), so the whole stage runs under a small
-    shuffle-partition setting — without it every tiny job in the CC loop
-    schedules cores× empty tasks and the stage anti-scales with
-    parallelism. The override is ISOLATED in ``spark.newSession()`` (same
-    SparkContext, separate SQLConf): mutating the caller's session conf
-    would race with any concurrently-planning job (the pipeline runs
-    linking and canonicalization from parallel threads — a large linking
-    shuffle must never inherit partitions=2). DataFrames cross the session
-    boundary via localCheckpoint + global temp views, which wrap a
-    context-level RDD, so no data moves."""
-    spark = surfaces.sparkSession
+    Runs in the caller's session and returns its result lazily: the CC loop
+    has run, the final label join has not (the pipeline caches and counts
+    it). The distinct-surface table is vocabulary-sized, orders of
+    magnitude below the corpus; AQE coalesces every shuffle, cached and
+    checkpointed output included, to partitions sized by bytes
+    (``session.SESSION_CONF``), so the CC loop's tiny jobs do not schedule
+    cores× empty tasks and no partition count is set here."""
     # materialize the (corpus-shuffle) distinct ONCE — candidate_pairs and
     # the CC node set must not each re-run it
     distinct_surfaces = surfaces.select("surface").distinct().localCheckpoint(eager=True)
-    n = distinct_surfaces.count()
-    parts = max(2, min(int(spark.conf.get("spark.sql.shuffle.partitions")), n // 10000 + 1))
-
-    iso = _isolated_session(spark)
-    iso.conf.set("spark.sql.shuffle.partitions", str(parts))
-    gt_db = spark.conf.get("spark.sql.globalTempDatabase", "global_temp")
-    global _CANON_RUN_SEQ
-    with _CANON_SEQ_LOCK:
-        _CANON_RUN_SEQ += 1
-        seq = _CANON_RUN_SEQ
-        # drop OUTPUT views kept alive by previous invocations (they had to
-        # outlive their call so the returned DataFrame never depends on a
-        # dropped catalog entry — ADVICE r3: eager-analysis-only lifetimes
-        # break under lazy analysis)
-        stale, _PENDING_OUT_VIEWS[:] = _PENDING_OUT_VIEWS[:], []
-    for t in stale:
-        spark.catalog.dropGlobalTempView(t)
-    tags = [f"_canon_{seq}_{s}" for s in ("in", "ee", "out")]
-    try:
-        distinct_surfaces.createOrReplaceGlobalTempView(tags[0])
-        surf_iso = iso.table(f"{gt_db}.{tags[0]}")
-        pairs = candidate_pairs(surf_iso, **kwargs)
-        if extra_edges is not None:
-            # only edges between known surfaces (bindings may reference
-            # strings outside the mention vocabulary)
-            extra_edges.select("a", "b").localCheckpoint(
-                eager=True
-            ).createOrReplaceGlobalTempView(tags[1])
-            ee = (
-                iso.table(f"{gt_db}.{tags[1]}")
-                .join(surf_iso.withColumnRenamed("surface", "a"), "a", "left_semi")
-                .join(surf_iso.withColumnRenamed("surface", "b"), "b", "left_semi")
-                .filter(F.col("a") != F.col("b"))
-                .select(
-                    F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-                )
-            )
-            pairs = pairs.unionByName(ee).distinct()
-        comp = connected_components(surf_iso, pairs, max_iterations=max_cc_iterations)
-        canon = (
-            comp.withColumn("norm", normalize_name_col(F.col("surface")))
-            .groupBy("component")
-            .agg(F.min("norm").alias("canon_id"))
+    pairs = candidate_pairs(distinct_surfaces, **kwargs)
+    if extra_edges is not None:
+        # only edges between known surfaces (bindings may reference
+        # strings outside the mention vocabulary)
+        ee = (
+            extra_edges.select("a", "b")
+            .join(distinct_surfaces.withColumnRenamed("surface", "a"), "a", "left_semi")
+            .join(distinct_surfaces.withColumnRenamed("surface", "b"), "b", "left_semi")
+            .filter(F.col("a") != F.col("b"))
+            .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         )
-        out = comp.join(canon, "component").select("surface", "canon_id")
-        out.localCheckpoint(eager=True).createOrReplaceGlobalTempView(tags[2])
-        # hand the materialized result back to the CALLER's session; the
-        # OUTPUT view stays registered until the next invocation so the
-        # returned DataFrame never references a dropped catalog entry
-        with _CANON_SEQ_LOCK:
-            _PENDING_OUT_VIEWS.append(tags[2])
-        return spark.table(f"{gt_db}.{tags[2]}")
-    finally:
-        # input views are fully consumed by the eager checkpoint above
-        for t in tags[:2]:
-            spark.catalog.dropGlobalTempView(t)
-
-
-import threading as _threading  # noqa: E402  (module tail: counter + lock)
-
-_CANON_RUN_SEQ = 0
-_CANON_SEQ_LOCK = _threading.Lock()
-_PENDING_OUT_VIEWS: list[str] = []
-_ISO_SESSIONS: dict[str, object] = {}
-
-# runtime SQLConf keys copied from the caller's session into the isolated
-# one on every call (spark.newSession() starts from SparkConf defaults, so
-# runtime overrides would otherwise silently not apply inside — ADVICE r3).
-# "SET" lists every explicitly-set runtime conf; immutable/static entries
-# are skipped via try/except.
-def _isolated_session(spark):
-    key = jvm_key(spark)
-    with _CANON_SEQ_LOCK:
-        iso = _ISO_SESSIONS.get(key)
-        if iso is None:
-            # a new applicationId means prior contexts are gone — drop refs
-            _ISO_SESSIONS.clear()
-            iso = spark.newSession()
-            _ISO_SESSIONS[key] = iso
-    for row in spark.sql("SET").collect():
-        k, v = row["key"], row["value"]
-        if k == "spark.sql.shuffle.partitions" or v == "<undefined>":
-            continue
-        try:
-            iso.conf.set(k, v)
-        except Exception:
-            pass  # static conf (warehouse dir, extensions) — not settable
-    return iso
+        pairs = pairs.unionByName(ee).distinct()
+    comp = connected_components(distinct_surfaces, pairs, max_iterations=max_cc_iterations)
+    canon = (
+        comp.withColumn("norm", normalize_name_col(F.col("surface")))
+        .groupBy("component")
+        .agg(F.min("norm").alias("canon_id"))
+    )
+    return comp.join(canon, "component").select("surface", "canon_id")

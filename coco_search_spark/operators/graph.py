@@ -24,6 +24,51 @@ from pyspark.sql import functions as F
 MAX_DEPTH = 5  # reference default depth cap, deps/query.py:179-243
 
 
+def _directed_step(edges: DataFrame, direction: str) -> DataFrame:
+    """edges → distinct one-hop (src, dst) in the walk direction, without
+    unresolved targets. Materialized once: BFS levels must not re-run the
+    upstream edge DAG."""
+    if direction == "forward":
+        step = edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
+    elif direction == "reverse":
+        step = edges.select(F.col("obj_id").alias("src"), F.col("subj_id").alias("dst"))
+    else:
+        raise ValueError(direction)
+    return step.filter(F.col("dst").isNotNull()).distinct().localCheckpoint(eager=True)
+
+
+def _bfs(step: DataFrame, roots: DataFrame, max_depth: int, per_root: bool = False) -> DataFrame:
+    """Level-by-level BFS over ``step`` from ``roots(node)``: (node, depth)
+    with minimal depths, or with ``per_root`` (root, node, depth), where a
+    node is new to a level unless its own root already reached it."""
+    keys = ["root"] if per_root else []
+    visited = (
+        roots.select(*(F.col("node").alias(k) for k in keys), "node", F.lit(0).alias("depth"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    frontier = visited.select(*keys, "node")
+    for depth in range(1, max_depth + 1):
+        nxt = (
+            step.join(frontier.withColumnRenamed("node", "src"), "src")
+            .select(*keys, F.col("dst").alias("node"))
+            .distinct()
+            .join(visited.select(*keys, "node"), [*keys, "node"], "left_anti")
+            .withColumn("depth", F.lit(depth))
+            .localCheckpoint(eager=True)
+        )
+        if nxt.isEmpty():
+            break
+        # lazy union of ≤max_depth ALREADY-checkpointed level frames: the
+        # anti-join's scan of it is level-table-sized, and skipping the
+        # per-level re-checkpoint of the whole visited set removes one
+        # scheduler round-trip per level (these tiny-frame BFS loops are
+        # job-count-bound, not data-bound)
+        visited = visited.unionByName(nxt)
+        frontier = nxt.select(*keys, "node")
+    return visited
+
+
 def transitive_closure(
     edges: DataFrame,
     roots: DataFrame,
@@ -36,38 +81,7 @@ def transitive_closure(
     reached nodes with the minimal depth, roots at depth 0. Cycle exclusion
     via left_anti against the visited set each level.
     """
-    if direction == "forward":
-        step = edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
-    elif direction == "reverse":
-        step = edges.select(F.col("obj_id").alias("src"), F.col("subj_id").alias("dst"))
-    else:
-        raise ValueError(direction)
-    # materialize once: levels must not re-run the upstream edge DAG
-    step = step.filter(F.col("dst").isNotNull()).distinct().localCheckpoint(eager=True)
-
-    visited = roots.select(F.col("node"), F.lit(0).alias("depth")).distinct().localCheckpoint(
-        eager=True
-    )
-    frontier = visited.select("node")
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            step.join(frontier.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("depth", F.lit(depth))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        # lazy union of ≤max_depth ALREADY-checkpointed level frames: the
-        # anti-join's scan of it is level-table-sized, and skipping the
-        # per-level re-checkpoint of the whole visited set removes one
-        # scheduler round-trip per level (these tiny-frame BFS loops are
-        # job-count-bound, not data-bound)
-        visited = visited.unionByName(nxt)
-        frontier = nxt.select("node")
-    return visited
+    return _bfs(_directed_step(edges, direction), roots, max_depth)
 
 
 def transitive_closure_per_root(
@@ -80,36 +94,7 @@ def transitive_closure_per_root(
     (root, node), so each root gets its own reachability (the blast-radius /
     impact-set semantics, deps/query.py:296-421 batch analog). Returns
     (root, node, depth) with minimal per-root depth."""
-    if direction == "forward":
-        step = edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
-    elif direction == "reverse":
-        step = edges.select(F.col("obj_id").alias("src"), F.col("subj_id").alias("dst"))
-    else:
-        raise ValueError(direction)
-    step = step.filter(F.col("dst").isNotNull()).distinct().localCheckpoint(eager=True)
-
-    visited = (
-        roots.select(F.col("node").alias("root"), F.col("node"), F.lit(0).alias("depth"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited.select("root", "node")
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            step.join(frontier.withColumnRenamed("node", "src"), "src")
-            .select("root", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("root", "node"), ["root", "node"], "left_anti")
-            .withColumn("depth", F.lit(depth))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        # lazy union of checkpointed level frames — same job-count trim as
-        # transitive_closure
-        visited = visited.unionByName(nxt)
-        frontier = nxt.select("root", "node")
-    return visited
+    return _bfs(_directed_step(edges, direction), roots, max_depth, per_root=True)
 
 
 def transitive_tree(
@@ -128,16 +113,10 @@ def transitive_tree(
     BFS tree choice is otherwise arbitrary). Roots carry parent = NULL.
     Computed as one post-hoc join over the closure: predecessors at
     depth-1 are grouped per node with min(), so no per-level parent state
-    is threaded through the loop."""
-    if direction == "forward":
-        step = edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
-    elif direction == "reverse":
-        step = edges.select(F.col("obj_id").alias("src"), F.col("subj_id").alias("dst"))
-    else:
-        raise ValueError(direction)
-    step = step.filter(F.col("dst").isNotNull()).distinct().localCheckpoint(eager=True)
-
-    vis = transitive_closure(edges, roots, direction, max_depth)
+    is threaded through the loop. The closure walks the same checkpointed
+    step table the parent join reads."""
+    step = _directed_step(edges, direction)
+    vis = _bfs(step, roots, max_depth)
     src_d = vis.select(F.col("node").alias("src"), F.col("depth").alias("src_depth"))
     dst_d = vis.select(F.col("node").alias("dst"), F.col("depth").alias("dst_depth"))
     parents = (

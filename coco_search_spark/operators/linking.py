@@ -12,8 +12,8 @@ The Spark re-expression of the reference's two retrieval legs and fusion:
 - keyword leg = ts_rank top-k (hybrid.py:169-186) as token-set Jaccard +
   window rank;
 - fusion = Reciprocal Rank Fusion, score = Σ 1/(k + rank), k = 60
-  (hybrid.py:29 RRF_K, rrf_fusion hybrid.py:306-416) as a full-outer join of
-  the two ranked lists + ``sum``;
+  (hybrid.py:29 RRF_K, rrf_fusion hybrid.py:306-416) over one pass that
+  ranks both legs, keeping every candidate either leg prefetched;
 - exact-match boost ×2.0 = the definition boost (hybrid.py:33,419-481);
 - tie-break favors the keyword-matched side (hybrid.py:409-414), then the
   stable entity_id so results are deterministic under any partitioning.
@@ -139,36 +139,31 @@ def _ranked_candidates(
         F.max("def_w").alias("def_w"),
     )
 
-    # ---- per-leg prefetch rank (deterministic tie-break on entity_id)
+    # ---- per-leg prefetch rank (deterministic tie-break on entity_id).
+    # Both legs rank the same rows over the same mention partitioning, so
+    # one pass over ``scored`` ranks both and RRF fusion (rrf_fusion
+    # hybrid.py:306-416) keeps a candidate that either leg prefetched: a
+    # leg's columns are NULL where it did not. Σ 1/(k+rank), with an absent
+    # leg contributing 0 — the rows of a full-outer join of the two ranked
+    # lists, without building ``scored`` twice.
     w_vec = Window.partitionBy("mention").orderBy(F.desc("vec_sim"), F.asc("entity_id"))
     w_kw = Window.partitionBy("mention").orderBy(F.desc("kw_sim"), F.asc("entity_id"))
-    vec_leg = (
+    in_v = F.col("v_rank") <= prefetch
+    in_k = (F.col("k_rank") <= prefetch) & (F.col("kw_sim") > 0)
+    fused = (
         scored.withColumn("v_rank", F.row_number().over(w_vec))
-        .filter(F.col("v_rank") <= prefetch)
-        .select(
-            "mention", "m_norm", "entity_id", "exact_norm", "def_w", "vec_sim", "v_rank"
-        )
-    )
-    kw_leg = (
-        scored.withColumn("k_rank", F.row_number().over(w_kw))
-        .filter((F.col("k_rank") <= prefetch) & (F.col("kw_sim") > 0))
+        .withColumn("k_rank", F.row_number().over(w_kw))
+        .filter(in_v | in_k)
         .select(
             "mention",
             "entity_id",
-            "kw_sim",
-            "k_rank",
-            # boost evidence must survive EITHER leg: a candidate outside
-            # the vector prefetch but inside the keyword leg still carries
-            # its exact-norm / definition flags into fusion
-            F.col("exact_norm").alias("k_exact"),
-            F.col("def_w").alias("k_defw"),
+            "exact_norm",
+            "def_w",
+            F.when(in_v, F.col("vec_sim")).alias("vec_sim"),
+            F.when(in_v, F.col("v_rank")).alias("v_rank"),
+            F.when(in_k, F.col("kw_sim")).alias("kw_sim"),
+            F.when(in_k, F.col("k_rank")).alias("k_rank"),
         )
-    )
-
-    # ---- RRF fusion: full-outer join of the two ranked lists (rrf_fusion
-    # hybrid.py:306-416); Σ 1/(k+rank) with absent legs contributing 0.
-    fused = (
-        vec_leg.join(kw_leg, ["mention", "entity_id"], "full_outer")
         .withColumn(
             "rrf",
             F.coalesce(1.0 / (F.lit(rrf_k) + F.col("v_rank")), F.lit(0.0))
@@ -185,26 +180,17 @@ def _ranked_candidates(
             # block-weighted: an exact normalized-name match gets the full
             # ×boost; definition-typed block evidence gets 1+(boost-1)·w
             # (full for fenced code, half for inline tool calls). Boosts do
-            # not stack — exact wins — and the flags are taken from
-            # whichever leg carried the candidate
+            # not stack — exact wins. The flags belong to the candidate,
+            # not to a leg, so a keyword-only candidate keeps them
             "boost_applied",
-            (F.coalesce(F.col("exact_norm"), F.col("k_exact")) == 1)
-            | (F.coalesce(F.col("def_w"), F.col("k_defw")) > 0),
+            (F.col("exact_norm") == 1) | (F.col("def_w") > 0),
         )
         .withColumn(
             "link_score",
-            F.when(
-                F.coalesce(F.col("exact_norm"), F.col("k_exact")) == 1,
-                F.col("rrf") * F.lit(boost),
-            )
+            F.when(F.col("exact_norm") == 1, F.col("rrf") * F.lit(boost))
             .when(
                 F.col("boost_applied"),
-                F.col("rrf")
-                * (
-                    1.0
-                    + (F.lit(boost) - 1.0)
-                    * F.coalesce(F.col("def_w"), F.col("k_defw"))
-                ),
+                F.col("rrf") * (1.0 + (F.lit(boost) - 1.0) * F.col("def_w")),
             )
             .otherwise(F.col("rrf")),
         )

@@ -27,6 +27,12 @@ SESSION_CONF: dict[str, str] = {
     # sized stages (canonicalization, node aggs) otherwise schedule
     # cores× empty tasks and anti-scale with parallelism
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    # ...and let that coalescing reach cached and checkpointed plans. Off
+    # (Spark's default), a persist or localCheckpoint output keeps all
+    # spark.sql.shuffle.partitions partitions, so a vocabulary-sized frame
+    # cached once (a CC round's labels, the link map) schedules that many
+    # near-empty tasks in every job that reads it
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # FAIR scheduling: the pipeline overlaps corpus-sized background
     # sinks (chunk write, quarantine) with vocabulary-sized foreground

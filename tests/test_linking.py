@@ -5,6 +5,9 @@
 from __future__ import annotations
 
 import math
+import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +16,8 @@ from coco_search_spark import fixtures
 from coco_search_spark.operators.extract import extract_mentions, extract_triples
 from coco_search_spark.operators.linking import RRF_K, link_mentions
 from coco_search_spark.operators.segments import segment_turns
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -113,3 +118,41 @@ def test_analyze_decisions_match_link_surfaces(spark, fx):
         if r["match_type"] == "both":
             assert r["v_rank"] is not None and r["k_rank"] is not None
         assert r["passed_min_score"] == (r["link_score"] >= 0.02)
+
+
+FRESH_JVM_LINK = """
+import sys
+from coco_search_spark.operators.linking import link_surfaces
+from coco_search_spark.session import get_spark
+
+spark = get_spark(2, shuffle_partitions=4)
+catalog = spark.read.parquet(sys.argv[1])  # the JVM's first DataFrame
+mentions = spark.createDataFrame([(m,) for m in sys.argv[2:]], "mention string")
+for r in link_surfaces(mentions, catalog).collect():
+    print("LINK", r["mention"], r["entity_id"])
+spark.stop()
+"""
+
+
+def test_linking_in_a_fresh_jvm_with_the_catalog_read_first(fx, tmp_path):
+    """Linking when the catalog is the first DataFrame of a fresh JVM, so
+    its columns carry the JVM's first expression ids (``alias#1``). Spark
+    renumbers lambda variables from 1 when it canonicalizes a higher-order
+    function, so a lambda body that captured ``alias#1`` lost it from its
+    references, and an inferred filter on it was pushed to a join side
+    without the column (``INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND``). A shared
+    test session never starts from id 0, hence the separate interpreter."""
+    path = str(tmp_path / "catalog.parquet")
+    fixtures.entity_catalog_pdf(fx.entities).to_parquet(path, index=False)
+    alias2ent = {a: e.canonical for e in fx.entities[:4] for a in e.aliases}
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=REPO)
+    proc = subprocess.run(
+        [sys.executable, "-c", FRESH_JVM_LINK, path, *alias2ent],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = dict(line.split()[1:] for line in proc.stdout.splitlines() if line.startswith("LINK "))
+    assert got == alias2ent

@@ -291,9 +291,9 @@ def test_pipeline_merges_in_text_alias_bindings(spark):
 
 
 def test_pipeline_with_catalog_links_concurrently(spark):
-    """Linking and canonicalization run from concurrent threads; the
-    canonicalize shuffle-partition override must stay isolated in its own
-    session (caller conf untouched) while linking produces entity ids."""
+    """Linking and canonicalization run from concurrent threads in the
+    caller's session; neither changes its conf (shuffle partitions
+    untouched) while linking produces entity ids."""
     from coco_search_spark.pipeline import run_pipeline
 
     t = _tdf(

@@ -83,49 +83,6 @@ def test_crash_between_facts_write_and_commit_resumes_cleanly(spark, fx, tmp_pat
     assert snap_after["version"] == 2 and snap_after["facts_path"]
 
 
-def test_canonicalize_isolated_session_cached_and_conf_propagated(spark):
-    """ADVICE r3: one isolated session per context (not one leak per call),
-    and the caller's runtime SQLConf is visible inside it."""
-    from coco_search_spark.operators import canonicalize as cz
-
-    old = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        iso1 = cz._isolated_session(spark)
-        iso2 = cz._isolated_session(spark)
-        assert iso1 is iso2
-        assert len(cz._ISO_SESSIONS) == 1
-        assert iso1.conf.get("spark.sql.session.timeZone") == "America/New_York"
-        # and the override the stage applies stays out of the caller session
-        iso1.conf.set("spark.sql.shuffle.partitions", "2")
-        assert spark.conf.get("spark.sql.shuffle.partitions") != "2"
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old)
-
-
-def test_canonicalize_result_view_survives_until_next_call(spark):
-    """The output temp view must outlive its call (the returned DataFrame
-    is bound to it); the NEXT invocation reclaims it."""
-    from coco_search_spark.operators import canonicalize as cz
-
-    surfaces = spark.createDataFrame(
-        [("paymentGateway",), ("payment_gateway",), ("authRouter",)], "surface string"
-    )
-    out1 = cz.canonicalize_surfaces(surfaces)
-    with cz._CANON_SEQ_LOCK:
-        pending_after_first = list(cz._PENDING_OUT_VIEWS)
-    assert len(pending_after_first) == 1
-    assert out1.count() == 3  # usable after the call returns
-    out2 = cz.canonicalize_surfaces(surfaces)
-    with cz._CANON_SEQ_LOCK:
-        pending_after_second = list(cz._PENDING_OUT_VIEWS)
-    # the first call's view was reclaimed; only the second's is pending
-    assert pending_after_second != pending_after_first
-    assert len(pending_after_second) == 1
-    # results identical and still readable (checkpoint-backed)
-    assert sorted(map(tuple, out1.collect())) == sorted(map(tuple, out2.collect()))
-
-
 def test_commit_extra_fields_roundtrip(spark, tmp_path):
     store = StateStore(str(tmp_path / "s"))
     rows = spark.createDataFrame(

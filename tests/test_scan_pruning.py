@@ -337,3 +337,37 @@ def test_majority_dirty_files_decline_pruning_with_parity(spark, tmp_path):
         StateStore(str(tmp_path / "s2")).read_table(spark, "facts")
     )
     assert _edge_rows(store.read_table(spark, "edges")) == _edge_rows(fresh.edges)
+
+
+def test_incremental_scan_off_rescans_with_pruned_parity(spark, tmp_path):
+    """``EngineConfig(incremental_scan=False)``: a warm run over a plain
+    file scan re-reads every file and records no manifest, and its edges
+    and nodes equal those of the pruned warm run over the same edit."""
+    from coco_search_spark.config import EngineConfig
+
+    d = _corpus(tmp_path, FILES)
+    b_path = os.path.join(d, "b.parquet")
+    edited = [
+        ("c2", 0, "gamma_svc emits cache2_cache ."),
+        ("c3", 0, "delta_svc emits queue3_queue ."),
+    ]
+    results = {}
+    for tag, cfg in (("on", EngineConfig()), ("off", EngineConfig(incremental_scan=False))):
+        _write_file(b_path, FILES["b.parquet"])
+        out, state = str(tmp_path / f"o_{tag}"), str(tmp_path / f"s_{tag}")
+        run_pipeline(spark, _read(spark, d), out_dir=out, state_dir=state)
+        _write_file(b_path, edited)
+        res = run_pipeline(spark, _read(spark, d), out_dir=out, state_dir=state, config=cfg)
+        store = StateStore(state)
+        results[tag] = (
+            res.metrics["n_files_scanned"],
+            store.last_snapshot().get("input_manifest"),
+            _edge_rows(store.read_table(spark, "edges")),
+            sorted(map(tuple, res.nodes.collect())),
+        )
+    on, off = results["on"], results["off"]
+    assert on[0] == 1 and on[1]
+    assert off[0] is None
+    assert off[1] is None
+    assert off[2] == on[2] and off[3] == on[3]
+    assert off[2] and off[3]

@@ -1,5 +1,6 @@
 """The session settings: one dict for both entry points, the codegen cache
-sized to the pipeline's working set, and JVM-keyed Column memos."""
+sized to the pipeline's working set, AQE-sized cached and checkpointed
+plans, and JVM-keyed Column memos."""
 
 from __future__ import annotations
 
@@ -7,6 +8,8 @@ import os
 import re
 import stat
 import subprocess
+
+from pyspark.sql import functions as F
 
 from coco_search_spark import fixtures
 from coco_search_spark.operators import extract
@@ -73,6 +76,26 @@ def test_driver_jvm_runs_with_the_session_jit_flags(spark):
     )
     assert opts["Tier4InvocationThreshold"] == "50000"
     assert {k: hotspot.getVMOption(k).getValue() for k in opts} == opts
+
+
+def test_vocabulary_sized_cached_and_checkpointed_plans_coalesce(spark):
+    """A vocabulary-sized aggregate keeps one partition once cached or
+    checkpointed: AQE coalesces by bytes inside cached plans too, so every
+    later job reading it runs one task, not one per shuffle partition. Each
+    case builds its own frame: a persist of a frame that already ran reuses
+    that run's coalesced plan and would pass either way."""
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+
+    def vocab(n):
+        return spark.range(1000).select((F.col("id") % n).alias("k")).groupBy("k").count()
+
+    cached = vocab(37).persist()
+    try:
+        assert cached.count() == 37
+        assert cached.rdd.getNumPartitions() == 1
+    finally:
+        cached.unpersist()
+    assert vocab(38).localCheckpoint(eager=True).rdd.getNumPartitions() == 1
 
 
 def test_submit_sh_renders_the_session_conf(tmp_path):
