@@ -9,8 +9,8 @@ connected-components canonicalization → salted graph materialization, over
 tables of multi-turn conversation transcripts.
 
 Everything is declared through the DataFrame API so Catalyst owns the
-physical plan; Python only runs inside Arrow-batched pandas UDFs
-(mapInPandas / pandas_udf) — never per-row.
+physical plan; Python only runs inside the chunk embedding's Arrow-batched
+pandas UDF — never per-row.
 """
 
 __version__ = "0.1.0"

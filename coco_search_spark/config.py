@@ -42,6 +42,12 @@ class EngineConfig:
     # excluded from the config identity so tuning them can't trigger a
     # spurious full re-extract on resume)
     compact_parts_after: int = 8
+    # vocabulary size under which the link/vector tables get an explicit
+    # broadcast hint in the pipeline (they certainly fit: ≤ a few hundred
+    # MB). Above it — the 10^9-distinct-surface contingency in SCALE.md — no
+    # hint is forced and every join keeps its sort-merge fallback (AQE may
+    # still broadcast if runtime sizes allow). The count used for the gate
+    # is the n_surfaces metric the pipeline computes anyway.
     broadcast_surface_limit: int = 5_000_000
     # input-manifest scan pruning (operators/scan_pruning.py): warm runs
     # re-read only changed files + affected conversations' home files.

@@ -221,18 +221,25 @@ def connected_components(
             .persist()
         )
         changed = new_labels.agg(F.sum("changed")).collect()[0][0] or 0
+        # this round's job filled the checkpoint it read, so the previous
+        # generation's cache is no longer needed
+        if prev_gen is not None:
+            prev_gen.unpersist()
+        if changed == 0:
+            # fixpoint: the labels this round read equal the new ones by
+            # construction and are already materialized — return them and
+            # leave nothing cached behind
+            new_labels.unpersist()
+            return labels.select("surface", "component")
         # cut the plan: the next round starts from the cached data, not
         # from this round's plan (three references to the previous
         # generation, so the plan would grow ~3.4x per round). The lazy
         # checkpoint plans no exchange and runs no job of its own; it is
-        # filled from the cache by the next round's job, after which the
-        # previous generation's cache is released
+        # filled from the cache by the next round's job
         labels = new_labels.select("surface", "component").localCheckpoint(eager=False)
-        if prev_gen is not None:
-            prev_gen.unpersist()
         prev_gen = new_labels
-        if changed == 0:
-            break
+    if prev_gen is not None:
+        prev_gen.unpersist()
     if changed != 0:
         raise RuntimeError(
             f"connected_components did not converge within {max_iterations} "

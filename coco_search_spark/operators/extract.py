@@ -42,10 +42,6 @@ provenance in one shuffle; ``extract_triples``,
 ``extract_triples_prov`` are projections of the same compiled array with
 one family selected.
 
-``extract_triples_arrow`` runs the same rules in Python per Arrow batch
-(``mapInPandas``). It is the test-only parity oracle, never a product
-path: Python regex per row is the UDF cost the native path avoids.
-
 Duplicates within a turn (including duplicates manufactured by segment
 overlap) are removed exactly like the reference's ``_deduplicate_edges``
 (extractor.py:181-203): distinct on the full triple key.
@@ -58,7 +54,6 @@ import re
 from collections.abc import Iterator
 from functools import reduce
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -391,43 +386,6 @@ def extract_alias_bindings(segments: DataFrame) -> DataFrame:
     return (
         _explode_facts(segments, ("binding",), "conv_id", "turn_idx")
         .select("conv_id", "turn_idx", "target", "alias")
-        .distinct()
-    )
-
-
-_ARROW_GRAMMAR = [
-    (re.compile(rx), swap, mapping) for rx, swap, mapping, _ in GRAMMAR
-]
-
-TRIPLE_SCHEMA = "conv_id string, turn_idx int, subj string, pred string, obj string"
-
-
-def extract_triples_arrow(segments: DataFrame) -> DataFrame:
-    """Arrow-batched variant: mapInPandas over (conv_id, turn_idx, seg_text)
-    batches; Python regex per batch, then the same distinct."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["seg_text"]
-            ):
-                for pattern, swap, mapping in _ARROW_GRAMMAR:
-                    for m in pattern.finditer(text or ""):
-                        pred = mapping[re.sub(r"\s+", " ", m.group(2))]
-                        objs = [m.group(3)]
-                        if pattern.groups >= 4:  # conjunction second object
-                            objs.append(m.group(4))
-                        for o in objs:
-                            subj, obj = (o, m.group(1)) if swap else (m.group(1), o)
-                            if subj in STOP_IDENTS or obj in STOP_IDENTS:
-                                continue
-                            rows.append((conv_id, int(turn_idx), subj, pred, obj))
-            yield pd.DataFrame(rows, columns=["conv_id", "turn_idx", "subj", "pred", "obj"])
-
-    return (
-        segments.select("conv_id", "turn_idx", "seg_text")
-        .mapInPandas(run, schema=TRIPLE_SCHEMA)
         .distinct()
     )
 

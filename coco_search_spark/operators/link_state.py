@@ -27,11 +27,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-LINK_SCHEMA = (
-    "mention string, entity_id string, link_score double, match_type string"
-)
-
-
 def catalog_fingerprint(catalog: DataFrame) -> str:
     """Order-independent content identity of the catalog: TWO folds of the
     per-row xxhash64 over all columns (sorted column order) — bit_xor AND a

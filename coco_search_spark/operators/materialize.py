@@ -57,7 +57,7 @@ def resolve_edges(
         F.col("mention").alias("obj"), F.col("canon_id").alias("obj_id")
     ).distinct()
     # note: the metadata map (JSONB analog) is attached at WRITE time by
-    # write_graph — keeping it out of the cached intermediate halves the
+    # write_edges — keeping it out of the cached intermediate halves the
     # cache's allocation/GC pressure (maps are the most expensive column
     # type to materialize)
     prov = [c for c in ("src_offset", "src_seg_idx") if c in triples.columns]
@@ -229,7 +229,7 @@ def write_edges(
     ``conv_id isin(...)`` predicate prunes on when fetching the replaced
     conversations' previous edges (StateStore.read_table). The sort's only
     consumer is that indexed fetch, which exists only for runs with a
-    StateStore — the storeless layout (write_graph) skips it: a per-
+    StateStore — the storeless layout skips it: a per-
     partition sort of the corpus-sized edge table bought nothing there.
 
     ``delta_sized``: the input is a warm-run delta — size the output by
@@ -303,12 +303,3 @@ def nodes_version_on_disk(nodes_path: str) -> int | None:
             return int(f.read().strip())
     except (OSError, ValueError):
         return None
-
-
-def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
-    """Storeless layout: one full edges dir + nodes. Runs with a StateStore
-    use versioned edge parts instead (pipeline.py edge-delta sink) so warm
-    runs write O(delta) edge files. No store → no indexed re-read of this
-    table, so the conv_id stats sort is skipped."""
-    write_edges(edges, f"{out_dir}/edges", sort_by_conv=False)
-    write_nodes(nodes, out_dir)

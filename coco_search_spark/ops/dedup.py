@@ -1,21 +1,21 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four families, all DataFrame-first, all deterministic (portable md5-based
-hashing so every intermediate is DuckDB-oracle-checkable):
+All DataFrame-first and deterministic (portable md5-based hashing, so every
+intermediate is DuckDB-oracle-checkable):
 
-- minhash+LSH: word-shingle MinHash signatures → banded buckets →
-               bucket-join candidates → exact-Jaccard verification
-- simhash:     64-bit sign-aggregated token hash; near-dups = small
-               Hamming distance, blocked by 16-bit chunks
-- n-gram Jaccard: word n-gram shingles, exact Jaccard over LSH candidates
-- embedding cosine: near-dup pairs via sign-projection LSH buckets over an
-               embedding column + cosine verification
+- ``word_shingles_col`` / ``minhash_sig_col``: word n-gram shingles and
+  their MinHash signature — the blocking key of the ``dedup_near_pairs``
+  and ``dedup_groups`` oracle queries, which join on a signature component
+  and verify with exact Jaccard
+- ``simhash_col``: 60-bit sign-aggregated token hash (``doc_simhash``)
+- ``dedup_groups``: near-dup pairs → one kept representative per connected
+  component
+- ``embedding_near_dup_pairs``: near-dup pairs via sign-projection LSH
+  buckets over an embedding column + cosine verification
 
 Scale design: no O(n²) anywhere — every pairwise comparison is preceded by
-an equi-join on a blocking key (band bucket / chunk / projection bucket);
-AQE skew-join covers hot buckets; a ``max_bucket`` guard drops degenerate
-buckets (all-identical shingles) the way production dedup pipelines cap
-posting lists.
+an equi-join on a blocking key (signature component / projection bucket);
+AQE skew-join covers hot buckets.
 """
 
 from __future__ import annotations
@@ -25,8 +25,6 @@ from pyspark.sql import functions as F
 
 from coco_search_spark.functions.embed import cosine_expr
 from coco_search_spark.functions.text import portable_hash_col
-from coco_search_spark.ops.globs import require_fraction as _require_fraction
-from coco_search_spark.ops.globs import require_positive as _require_positive
 
 # ------------------------------------------------------------- shingling
 
@@ -55,73 +53,6 @@ def minhash_sig_col(shingles, n_hashes: int):
     )
 
 
-# --------------------------------------------------------------- minhash
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    n_hashes: int = 16,
-    n_bands: int = 4,
-    jaccard_threshold: float = 0.7,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b, jaccard): MinHash bands → bucket
-    join → exact Jaccard filter."""
-    _require_positive(shingle_n=shingle_n, n_hashes=n_hashes, n_bands=n_bands, max_bucket=max_bucket)
-    _require_fraction(jaccard_threshold=jaccard_threshold)
-    if n_hashes % n_bands != 0:
-        raise ValueError(f"n_bands ({n_bands}) must divide n_hashes ({n_hashes})")
-    rows_per_band = n_hashes // n_bands
-    base = df.select(
-        F.col(id_col).alias("id"),
-        word_shingles_col(F.col(text_col), shingle_n).alias("sh"),
-    ).withColumn("sig", minhash_sig_col(F.col("sh"), n_hashes))
-    banded = base.select(
-        "id",
-        "sh",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda b: F.struct(
-                    b.cast("int").alias("band"),
-                    F.array_join(
-                        F.transform(
-                            F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                            lambda v: v.cast("string"),
-                        ),
-                        "_",
-                    ).alias("key"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("id", "sh", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
-    # cap degenerate buckets (posting-list guard)
-    sizes = banded.groupBy("band", "key").agg(F.count(F.lit(1)).alias("bsz"))
-    banded = banded.join(sizes.filter(F.col("bsz") <= max_bucket), ["band", "key"])
-
-    left = banded.select("band", "key", F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    right = banded.select("band", "key", F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        left.join(right, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
-        .distinct()
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-                / F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
 # --------------------------------------------------------------- simhash
 
 def simhash_col(text, bits: int = 60):
@@ -147,85 +78,6 @@ def simhash_col(text, bits: int = 60):
     return out
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    bits: int = 60,
-    n_chunks: int | None = None,
-    max_bucket: int = 10000,
-) -> DataFrame:
-    """Near-dup pairs by SimHash, blocked on bit chunks, verified with
-    bit_count(xor).
-
-    Recall guarantee (pigeonhole): any pair with Hamming distance ≤
-    n_chunks - 1 has at least one chunk with no differing bit, so it is
-    guaranteed to land in a shared bucket. ``n_chunks`` therefore defaults
-    to ``max_hamming + 1`` so the guarantee covers the whole requested
-    radius. Fewer chunks = wider chunk keys = smaller buckets (faster) but
-    pairs differing in ≥ n_chunks bits spread across chunks can be missed —
-    callers overriding n_chunks below max_hamming+1 get an assertion error,
-    not silent recall loss. Default max_hamming=3 / 4 chunks of 15 bits is
-    the classic web-dedup configuration.
-
-    ``max_bucket`` caps degenerate buckets (the posting-list guard —
-    narrow chunk keys at high max_hamming make hot buckets, and one
-    all-zeros bucket must not go quadratic at 100 TB). Oversized buckets
-    are NOT dropped — they keep a deterministic sample (the ``max_bucket``
-    smallest ids), so mass-duplicated content (which is exactly what fills
-    a hot bucket) still pairs within the sample instead of silently losing
-    the pigeonhole recall guarantee; recall beyond the sample degrades
-    gracefully rather than to zero."""
-    if n_chunks is None:
-        n_chunks = max_hamming + 1
-    assert max_hamming < n_chunks, (
-        f"pigeonhole guarantee needs n_chunks > max_hamming "
-        f"(got n_chunks={n_chunks}, max_hamming={max_hamming})"
-    )
-    chunk_bits = -(-bits // n_chunks)  # ceil: chunks cover every bit
-    base = df.select(F.col(id_col).alias("id"), simhash_col(F.col(text_col), bits).alias("sim"))
-    chunked = base.select(
-        "id",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("sim"), c * chunk_bits)
-                        .bitwiseAND(F.lit((1 << chunk_bits) - 1))
-                        .alias("ckey"),
-                    )
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("ck"),
-    ).select("id", "sim", F.col("ck.chunk").alias("chunk"), F.col("ck.ckey").alias("ckey"))
-    # deterministic bucket cap: rank by id within (chunk, ckey) and keep the
-    # smallest max_bucket ids — same exchange key as the self-join below, so
-    # the window reuses the shuffle instead of adding a groupBy+join pass
-    from pyspark.sql import Window as _W
-
-    _w = _W.partitionBy("chunk", "ckey").orderBy("id")
-    chunked = (
-        chunked.withColumn("_rk", F.row_number().over(_w))
-        .filter(F.col("_rk") <= max_bucket)
-        .drop("_rk")
-    )
-    left = chunked.select("chunk", "ckey", F.col("id").alias("id_a"), F.col("sim").alias("sim_a"))
-    right = chunked.select("chunk", "ckey", F.col("id").alias("id_b"), F.col("sim").alias("sim_b"))
-    return (
-        left.join(right, ["chunk", "ckey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sim_a", "sim_b")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
 # ----------------------------------------------------------- dedup groups
 
 def dedup_groups(
@@ -241,8 +93,8 @@ def dedup_groups(
     exactly for the group representative (min id — deterministic under any
     partitioning).
 
-    pairs: DataFrame(id_a, id_b) from any of the pair generators
-    (minhash_lsh_pairs / simhash_pairs / embedding_near_dup_pairs)."""
+    pairs: DataFrame(id_a, id_b), e.g. MinHash-blocked Jaccard pairs (the
+    ``dedup_groups`` oracle query) or ``embedding_near_dup_pairs``."""
     from coco_search_spark.operators.canonicalize import connected_components
 
     nodes = df.select(F.col(id_col).alias("surface"))

@@ -14,9 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_GLOB_CHARS = set("*?")
-
-
 def glob_to_like(pattern: str) -> str:
     """Glob → LIKE pattern: ``*``→``%``, ``?``→``_``; literal ``%``/``_``
     in the glob are escaped so they match themselves. Raises ValueError on

@@ -35,15 +35,12 @@ from coco_search_spark.operators.linking import link_surfaces
 from coco_search_spark.operators.materialize import build_nodes, resolve_edges
 from coco_search_spark.operators.segments import segment_turns
 from coco_search_spark.operators.validate import split_quarantine
-from coco_search_spark.state import StateStore, conversation_hashes, diff_against_state
-
-# Vocabulary size under which the link/vector tables get an explicit
-# broadcast hint in the pipeline (they certainly fit: ≤ a few hundred MB).
-# Above it — the 10^9-distinct-surface contingency in SCALE.md — no hint
-# is forced and every join keeps its sort-merge fallback (AQE may still
-# broadcast if runtime sizes allow). The count used for the gate is the
-# n_surfaces metric the pipeline computes anyway.
-BROADCAST_SURFACE_LIMIT = 5_000_000
+from coco_search_spark.state import (
+    StateStore,
+    conversation_hashes,
+    diff_against_state,
+    resolve_parts,
+)
 
 # A run's background pool (guide §2.6: overlap independent jobs). Its
 # threads carry this name prefix. It is sized to the most tasks that can be
@@ -69,40 +66,6 @@ def _live_path(snap: dict | None, key: str) -> str | None:
 
 def _write(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").parquet(path)
-
-
-def _reload_parts(
-    spark: SparkSession,
-    parts: list[dict],
-    unchanged_ids: DataFrame,
-    stored: DataFrame,
-) -> DataFrame:
-    """Current rows of a delta-written table restricted to the unchanged
-    conversations. A conversation's authoritative rows live in the part
-    whose version equals its ``written_version`` state column (stale rows
-    of since-changed conversations in older parts are thereby skipped);
-    with a single part — cold run or fresh compaction — the part IS the
-    full table and no version resolution is needed."""
-    if len(parts) == 1:
-        return spark.read.parquet(parts[0]["path"]).join(
-            unchanged_ids, "conv_id", "left_semi"
-        )
-    versions = stored.select("conv_id", "written_version").join(
-        unchanged_ids, "conv_id", "left_semi"
-    )
-    out = None
-    for p in parts:
-        rows = spark.read.parquet(p["path"]).join(
-            versions.filter(F.col("written_version") == p["version"]).select(
-                "conv_id"
-            ),
-            "conv_id",
-            "left_semi",
-        )
-        # allowMissingColumns: parts written by different engine versions
-        # may differ in columns (same evolution rule as ensure_columns)
-        out = rows if out is None else out.unionByName(rows, allowMissingColumns=True)
-    return out
 
 
 @dataclass
@@ -217,7 +180,9 @@ class _Scope:
     cur_hashes: DataFrame | None = None
     diff: DataFrame | None = None
     dirty_ids: DataFrame | None = None
-    unchanged_ids: DataFrame | None = None
+    # (conv_id, written_version) of the unchanged conversations: the part
+    # pointers their reloaded facts/chunks resolve against
+    unchanged_versions: DataFrame | None = None
     n_unchanged: int = 0
     n_dirty: int = 0
     n_deleted: int = 0
@@ -392,7 +357,7 @@ def _run_stages(run: _Run, transcripts: DataFrame) -> PipelineResult:
             # fold unchanged conversations' rows from every previous part
             # (embeddings reloaded, never re-derived)
             chunks = chunks.unionByName(
-                _reload_parts(spark, scope.chunks_parts, scope.unchanged_ids, run.stored),
+                resolve_parts(spark, scope.chunks_parts, scope.unchanged_versions),
                 allowMissingColumns=True,
             )
         chunks_path = run.part("chunks")
@@ -653,8 +618,12 @@ def _scope(run: _Run, transcripts: DataFrame) -> _Scope:
         # alone would silently drop their standalone mentions (degree-0
         # nodes) and alias bindings (cluster merges) from this run's output.
         # Previous CHUNKS are read only by a compaction run.
-        s.unchanged_ids = diff.filter(F.col("status") == "unchanged").select("conv_id")
-        s.prev_facts = _reload_parts(spark, s.facts_parts, s.unchanged_ids, stored)
+        s.unchanged_versions = stored.select("conv_id", "written_version").join(
+            diff.filter(F.col("status") == "unchanged").select("conv_id"),
+            "conv_id",
+            "left_semi",
+        )
+        s.prev_facts = resolve_parts(spark, s.facts_parts, s.unchanged_versions)
         return s
     # unchanged conversations exist but their previous facts are not
     # reloadable (prior run committed state without an out_dir, a pre-facts
@@ -1348,7 +1317,7 @@ def _sinks(
     # instead of sum(sink)
     sinks = {}
     if run.store is None:
-        # storeless layout (write_graph semantics): no manifest to version
+        # storeless layout: one full edges dir + nodes, no manifest to version
         # against, no indexed reader → no conv_id sort
         sinks["edges"] = lambda: write_edges(e.edges, f"{out_dir}/edges", sort_by_conv=False)
         sinks["nodes"] = lambda: write_nodes(nodes_f.result()[0], out_dir)
@@ -1476,7 +1445,7 @@ def _state_rows(
     if g.delta and not g.compact:
         # written_version: dirty conversations' rows went into THIS run's
         # part; unchanged ones keep the version of the part that last
-        # wrote them — the pointer _reload_parts resolves against
+        # wrote them — the pointer state.resolve_parts resolves against
         base = base.join(s.diff.select("conv_id", "status"), "conv_id", "left").join(
             run.stored.select(
                 "conv_id",

@@ -189,6 +189,44 @@ def diff_against_state(current: DataFrame, stored: DataFrame) -> DataFrame:
     )
 
 
+def resolve_parts(
+    spark: SparkSession,
+    parts: list[dict],
+    versions: DataFrame,
+    restrict=None,
+) -> DataFrame:
+    """Current rows of a delta-written table for the conversations in
+    ``versions`` (conv_id, written_version): each conversation's
+    authoritative rows live in the part whose version equals its pointer,
+    so resolution is one semi-join per part (parts are bounded by
+    COMPACT_PARTS_AFTER) and stale rows of since-changed conversations in
+    older parts are skipped. A single part holds at LEAST those rows but
+    can hold more — a no-op run after deletions carries the part forward,
+    so since-deleted conversations' rows are still in the files — and the
+    semi-join against ``versions`` drops them. ``restrict`` (a Column) is
+    pushed into every part scan and into ``versions``."""
+    if restrict is not None:
+        versions = versions.filter(restrict)
+
+    def scan(path: str) -> DataFrame:
+        rows = spark.read.parquet(path)
+        return rows if restrict is None else rows.filter(restrict)
+
+    if len(parts) == 1:
+        return scan(parts[0]["path"]).join(versions.select("conv_id"), "conv_id", "left_semi")
+    out = None
+    for p in parts:
+        rows = scan(p["path"]).join(
+            versions.filter(F.col("written_version") == p["version"]).select("conv_id"),
+            "conv_id",
+            "left_semi",
+        )
+        # allowMissingColumns: parts written by different engine versions
+        # may differ in columns (same evolution rule as ensure_columns)
+        out = rows if out is None else out.unionByName(rows, allowMissingColumns=True)
+    return out
+
+
 class StateStore:
     """Parquet + manifest state store. One directory per pipeline run chain;
     each commit writes a new versioned parquet snapshot and atomically
@@ -584,11 +622,10 @@ class StateStore:
         CURRENT full contents — the external-reader contract.
 
         Each run writes only the dirty conversations' rows into a new
-        version dir (Iceberg MERGE analog); a conversation's authoritative
-        rows live in the dir matching its ``written_version`` in the state
-        table, so resolution is one cheap semi-join per part (parts are
-        bounded by COMPACT_PARTS_AFTER). Deleted conversations drop out
-        naturally — they have no state row.
+        version dir (Iceberg MERGE analog); ``resolve_parts`` picks each
+        conversation's rows from the dir matching its pointer in the state
+        table. Deleted conversations drop out naturally — they have no
+        state row.
 
         ``conv_ids``: optional restriction to a known id set. Unlike a
         semi-join (whose build side Parquet never sees), an ``isin`` filter
@@ -607,42 +644,12 @@ class StateStore:
         parts = self.table_parts(kind, version=version)
         if not parts:
             raise FileNotFoundError(f"snapshot carries no {kind} table")
-        restrict = (
-            F.col("conv_id").isin(conv_ids) if conv_ids is not None else F.lit(True)
-        )
         pointer = POINTER_COLS.get(kind, "written_version")
         versions = self.read(spark, version=version).select(
-            "conv_id", F.col(pointer).alias("_wv")
+            "conv_id", F.col(pointer).alias("written_version")
         )
-        if conv_ids is not None:
-            versions = versions.filter(restrict)
-        if len(parts) == 1:
-            # a single part holds at LEAST the full table, but can hold
-            # more: a no-op run after deletions carries the part forward,
-            # so since-deleted conversations' rows are still in the files —
-            # the state semi-join (they have no state row) drops them
-            return (
-                spark.read.parquet(parts[0]["path"])
-                .filter(restrict)
-                .join(versions.select("conv_id"), "conv_id", "left_semi")
-            )
-        out = None
-        for p in parts:
-            rows = (
-                spark.read.parquet(p["path"])
-                .filter(restrict)
-                .join(
-                    versions.filter(F.col("_wv") == p["version"]).select("conv_id"),
-                    "conv_id",
-                    "left_semi",
-                )
-            )
-            out = (
-                rows
-                if out is None
-                else out.unionByName(rows, allowMissingColumns=True)
-            )
-        return out
+        restrict = F.col("conv_id").isin(conv_ids) if conv_ids is not None else None
+        return resolve_parts(spark, parts, versions, restrict)
 
     def read_convs(
         self,

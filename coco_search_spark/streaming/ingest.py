@@ -1,91 +1,25 @@
 """Structured Streaming ingest for the KG pipeline.
 
 The reference has no streaming (SURVEY §2.11) — its incremental machinery is
-batch re-run + sha256 diff (flow.py:343-361). This module provides the
-streaming-native equivalent the north rule's resumable semantics want:
-
-- ``stream_transcripts``  — file-source readStream over a transcripts
-  directory (the sandbox stand-in for an Iceberg/ Kafka source), with the
-  input_hint schema enforced;
-- ``run_streaming_pipeline`` — foreachBatch → the SAME batch operators
-  (segment → extract → MERGE-style append of new triples keyed by
-  conversation content hash), so batch and streaming share one code path —
-  the Kappa-style design Structured Streaming encourages;
-- ``turn_rate_metrics``   — watermark + sliding-window per-role turn counts,
-  the canonical late-data-tolerant streaming aggregation.
+batch re-run + sha256 diff (flow.py:343-361). ``run_streaming_indexer`` is
+the streaming-native equivalent and the one streaming entry point: a
+file-source readStream over a transcripts directory (the sandbox stand-in
+for an Iceberg/Kafka source, the transcript schema enforced) whose
+foreachBatch runs the batch ``run_pipeline`` itself in upsert mode, so batch
+and streaming share one code path — the Kappa-style design Structured
+Streaming encourages.
 
 Checkpointing: Spark's own streaming checkpoint directory carries source
 offsets; the pipeline's StateStore carries per-conversation lineage — the
-two together give end-to-end exactly-once into the parquet sinks
-(idempotent overwrite by batch id).
+two together give end-to-end exactly-once into the store (a replayed batch
+re-runs the same idempotent upsert).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from coco_search_spark.fixtures import TRANSCRIPT_SCHEMA
-from coco_search_spark.operators.extract import extract_all, split_extracted
-from coco_search_spark.operators.segments import segment_turns
-
-
-def stream_transcripts(spark: SparkSession, input_dir: str) -> DataFrame:
-    return (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-
-
-def run_streaming_pipeline(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
-    """readStream → foreachBatch(extract) → append triples parquet.
-
-    Returns the StreamingQuery. With availableNow the query drains all
-    currently-visible files and stops — the test/bootstrap mode; drop the
-    flag for a continuous run.
-    """
-    stream = stream_transcripts(spark, input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # same one-scan unified extraction as the batch pipeline (Kappa:
-        # one code path); the combined fact table is cached once per batch
-        # so the two family sinks don't re-scan the micro-batch
-        combined = extract_all(
-            segment_turns(batch_df, with_offsets=True)
-        ).cache()
-        triples, mentions, bindings = split_extracted(combined)
-        # idempotent replay: each batch owns a batch-id-keyed directory and
-        # OVERWRITES it, so a batch re-run after a failure (foreachBatch is
-        # at-least-once) replaces its own output instead of appending
-        # duplicates — this plus the checkpointed source offsets gives
-        # effectively-once into the sink. Readers see batch_id as a
-        # partition column of {out_dir}/triples_stream. Full batch-parity:
-        # alias-binding evidence must survive streaming too (ADVICE r3 —
-        # dropping it silently weakened downstream canonicalization merges
-        # for streamed conversations). The cache is released in finally, so
-        # a failing sink write does not leave the batch cached.
-        sinks = {"triples": triples, "mentions": mentions, "bindings": bindings}
-        try:
-            for name, df in sinks.items():
-                df.write.mode("overwrite").parquet(
-                    f"{out_dir}/{name}_stream/batch_id={batch_id}"
-                )
-        finally:
-            combined.unpersist()
-
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_streaming_indexer(
@@ -101,9 +35,8 @@ def run_streaming_indexer(
     branch: str | None = None,
 ):
     """readStream → foreachBatch(run_pipeline(upsert_only=True)) — the
-    streaming-maintained STATE STORE (where ``run_streaming_pipeline``
-    streams raw extraction output, this maintains the full index: facts,
-    chunks, edges, nodes, vocabulary, snapshots).
+    streaming-maintained STATE STORE: the full index (facts, chunks, edges,
+    nodes, vocabulary, snapshots), one commit per micro-batch.
 
     Each micro-batch is a partial corpus, so the batch pipeline runs in
     upsert mode: conversations absent from the batch are carried, never
@@ -154,24 +87,3 @@ def run_streaming_indexer(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def turn_rate_metrics(
-    transcripts_stream: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "15 minutes",
-) -> DataFrame:
-    """Watermarked sliding-window per-role turn counts — the streaming
-    metrics table (A5/A7 analog, late data tolerated up to the watermark)."""
-    return (
-        transcripts_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "role")
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "role",
-            "n_turns",
-        )
-    )

@@ -122,3 +122,19 @@ def test_alias_bindings_merge_unrelated_surfaces(spark):
     }
     assert with_b["pg_zz"] == with_b["payment_gateway"] == with_b["paymentGateway"]
     assert with_b["auth_service"] != with_b["pg_zz"]
+
+
+def test_canonicalize_leaves_nothing_cached(spark):
+    """connected_components persists each round's labels for its
+    convergence check; it must release every generation before it returns,
+    or a long-lived session (streaming micro-batches) accumulates them."""
+    words = ["alpha", "bravo", "charlie", "delta", "echo"] * 4
+    names = [f"{w}_{i:02d}" for i, w in enumerate(words)]
+    surfaces = spark.createDataFrame([(n,) for n in names], "surface string")
+    chain = spark.createDataFrame(
+        [(names[i], names[i + 1]) for i in range(11)], "a string, b string"
+    )
+    spark.catalog.clearCache()
+    rows = canonicalize_surfaces(surfaces, extra_edges=chain).collect()
+    assert len({r["canon_id"] for r in rows if r["surface"] in names[:12]}) == 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -32,11 +32,9 @@ def test_defaults_mirror_module_constants():
     assert c.n_bands == cz.N_BANDS
     assert c.jaccard_threshold == cz.JACCARD_THRESHOLD
     assert c.max_cc_iterations == cz.MAX_CC_ITERATIONS
-    from coco_search_spark import pipeline as pl
     from coco_search_spark import state as st
 
     assert c.compact_parts_after == st.COMPACT_PARTS_AFTER
-    assert c.broadcast_surface_limit == pl.BROADCAST_SURFACE_LIMIT
 
 
 def test_validation_collects_all_problems_at_once():

@@ -8,11 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from coco_search_spark.operators.extract import (
-    extract_mentions,
-    extract_triples,
-    extract_triples_arrow,
-)
+from coco_search_spark.operators.extract import extract_mentions, extract_triples
 from coco_search_spark.operators.segments import reassemble_turns, segment_turns
 from coco_search_spark.reference_extractor import (
     extract_reference,
@@ -79,11 +75,6 @@ def test_extraction_precision_recall_vs_reference(spark, transcripts, fx):
     assert p >= 0.95 and r >= 0.95, (p, r)
     # with regex-exact rules the match is in fact perfect
     assert got == ref
-
-
-def test_arrow_and_native_extractors_agree(spark, transcripts):
-    segs = segment_turns(transcripts)
-    assert _as_set(extract_triples(segs)) == _as_set(extract_triples_arrow(segs))
 
 
 def test_extraction_immune_to_segment_boundaries(spark, fx):

@@ -5,12 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from coco_search_spark.ops.dedup import (
-    embedding_near_dup_pairs,
-    minhash_lsh_pairs,
-    simhash_col,
-    simhash_pairs,
-)
+from coco_search_spark.ops.dedup import embedding_near_dup_pairs, simhash_col
 from coco_search_spark.ops.similarity import brute_force_topk, lsh_topk, recall_at_k
 from coco_search_spark.ops.textstats import (
     fingerprint_overlap_pairs,
@@ -35,24 +30,12 @@ def docs(spark):
     return df
 
 
-def test_minhash_near_dups(spark, docs):
-    pairs = {
-        (r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(docs, "doc_id", "text", jaccard_threshold=0.5).collect()
-    }
-    assert (0, 1) in pairs      # exact dup always found
-    assert (0, 2) in pairs or (1, 2) in pairs  # near dup found
-    assert not any(3 in p for p in pairs)      # unrelated doc untouched
-
-
 def test_simhash_properties(spark, docs):
     vals = {r["doc_id"]: r["h"] for r in docs.select("doc_id", simhash_col(F.col("text")).alias("h")).collect()}
     assert vals[0] == vals[1]          # identical text → identical simhash
     # near-dup differs in few bits
     ham = bin(vals[0] ^ vals[2]).count("1")
     assert ham <= 12
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in simhash_pairs(docs, "doc_id", "text", max_hamming=12).collect()}
-    assert (0, 1) in pairs and pairs[(0, 1)] == 0
-    assert (0, 2) in pairs
 
 
 def test_embedding_near_dups(spark):

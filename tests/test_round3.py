@@ -353,20 +353,14 @@ def test_glob_compile_and_filter(spark):
 
 def test_query_arg_validation(spark):
     from coco_search_spark.operators.linking import link_surfaces
-    from coco_search_spark.ops.dedup import minhash_lsh_pairs
     from coco_search_spark.ops.similarity import ivf_topk
 
-    df = spark.createDataFrame([(0, "x")], "doc_id int, text string")
     emb = spark.createDataFrame([(0, [0.1, 0.2])], "vec_id int, embedding array<double>")
     q = spark.createDataFrame([(0, [0.1, 0.2])], "q_id int, q_vec array<double>")
     with pytest.raises(ValueError, match="positive"):
         ivf_topk(emb, q, k=0)
     with pytest.raises(ValueError, match="nprobe"):
         ivf_topk(emb, q, n_centroids=2, nprobe=5)
-    with pytest.raises(ValueError, match="divide"):
-        minhash_lsh_pairs(df, "doc_id", "text", n_hashes=16, n_bands=5)
-    with pytest.raises(ValueError, match="fractions"):
-        minhash_lsh_pairs(df, "doc_id", "text", jaccard_threshold=1.5)
     m = spark.createDataFrame([("a",)], "mention string")
     cat = spark.createDataFrame([("e", "a")], "entity_id string, alias string")
     with pytest.raises(ValueError, match="positive"):
