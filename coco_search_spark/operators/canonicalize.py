@@ -184,6 +184,9 @@ def connected_components(
     labels = nodes.select(
         F.col("surface"), F.col("surface").alias("component")
     ).localCheckpoint(eager=True)
+    # every checkpoint the loop makes; all but the one the result reads
+    # are released on the way out
+    ckpts = [sym, labels]
 
     prev_gen = None
     changed = 0
@@ -230,6 +233,7 @@ def connected_components(
             # construction and are already materialized — return them and
             # leave nothing cached behind
             new_labels.unpersist()
+            _release(ckpts, keep=labels)
             return labels.select("surface", "component")
         # cut the plan: the next round starts from the cached data, not
         # from this round's plan (three references to the previous
@@ -237,9 +241,11 @@ def connected_components(
         # checkpoint plans no exchange and runs no job of its own; it is
         # filled from the cache by the next round's job
         labels = new_labels.select("surface", "component").localCheckpoint(eager=False)
+        ckpts.append(labels)
         prev_gen = new_labels
     if prev_gen is not None:
         prev_gen.unpersist()
+    _release(ckpts, keep=labels if changed == 0 else None)
     if changed != 0:
         raise RuntimeError(
             f"connected_components did not converge within {max_iterations} "
@@ -247,6 +253,16 @@ def connected_components(
             "of returning silently split components"
         )
     return labels.select("surface", "component")
+
+
+def _release(ckpts: list[DataFrame], keep: DataFrame | None) -> None:
+    """Drop the blocks of every local checkpoint in ``ckpts`` except
+    ``keep``'s. A checkpointed frame's plan is one LogicalRDD leaf over the
+    persisted RDD; unpersisting that RDD frees its blocks and removes it
+    from the context's persistent-RDD registry, with no job."""
+    for df in ckpts:
+        if df is not keep:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def canonicalize_surfaces(

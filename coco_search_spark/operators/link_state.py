@@ -24,7 +24,7 @@ merged output is value-identical to a full re-link by construction
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 def catalog_fingerprint(catalog: DataFrame) -> str:
@@ -39,22 +39,28 @@ def catalog_fingerprint(catalog: DataFrame) -> str:
     commutative so the result is partitioning-independent. The sum runs in
     decimal(38,0) — a raw long sum of 64-bit hashes would overflow-throw
     under Spark's ANSI default — and is masked to 64 bits driver-side."""
-    cols = [F.col(c).cast("string") for c in sorted(catalog.columns)]
+    return fingerprint_and_count(catalog, F.lit(False))[0]
+
+
+def fingerprint_and_count(df: DataFrame, cond: Column) -> tuple[str, int]:
+    """(:func:`catalog_fingerprint` of ``df``, the number of its rows
+    matching ``cond``) from ONE aggregation."""
+    cols = [F.col(c).cast("string") for c in sorted(df.columns)]
     fp_row = (
-        catalog.select(F.xxhash64(*cols).alias("h"))
+        df.select(F.xxhash64(*cols).alias("h"), cond.alias("hit"))
         .agg(
             F.coalesce(F.expr("bit_xor(h)"), F.lit(0)).alias("fp_xor"),
             F.coalesce(
                 F.sum(F.col("h").cast("decimal(38,0)")), F.lit(0)
             ).alias("fp_sum"),
             F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("hit"), 1)).alias("n_hit"),
         )
         .collect()[0]
     )
     mask = 0xFFFFFFFFFFFFFFFF
-    return (
-        f"{fp_row['fp_xor'] & mask:x}:{int(fp_row['fp_sum']) & mask:x}:{fp_row['n']}"
-    )
+    fp = f"{fp_row['fp_xor'] & mask:x}:{int(fp_row['fp_sum']) & mask:x}:{fp_row['n']}"
+    return fp, fp_row["n_hit"]
 
 
 def split_link_work(

@@ -53,6 +53,8 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from coco_search_spark.state import keep_ids
+
 # When more than this fraction of the input files changed, pruning is a
 # net loss: the scoped path list approaches the whole manifest, and the
 # scoping itself costs extra scheduler round-trips (changed-file id scan,
@@ -111,7 +113,9 @@ def input_manifest(df: DataFrame) -> dict[str, str] | None:
 @dataclass
 class PrunedScan:
     scoped_raw: DataFrame  # raw rows of every file that must be re-read
-    cand_ids: DataFrame  # conv_ids whose hash must be recomputed
+    # conv_ids whose hash must be recomputed: a driver list, or a conv_id
+    # frame above MAX_FUSED_CAND_IDS (state.keep_ids applies either)
+    cand_ids: list | DataFrame
     # stored rows carried forward verbatim:
     # (conv_id, content_hash, rows_in, src_files, stored_errors)
     carried: DataFrame
@@ -155,17 +159,16 @@ def plan_pruned_scan(
         return None
     schema = transcripts.schema
     affected = changed + removed
-    if affected:
-        affected_df = spark.createDataFrame([(f,) for f in affected], "f string")
-        cand_from_state = (
-            stored.select("conv_id", F.explode("src_files").alias("f"))
-            .join(affected_df, "f", "left_semi")
-            .select("conv_id")
-            .distinct()
-        )
-    else:
-        cand_from_state = stored.limit(0).select("conv_id")
-    cand_ids = cand_from_state
+    # (conv_id, src_files) of every candidate with a stored row. A stored
+    # home set touching an affected file is a driver-known predicate (no
+    # join); conversations inside a changed/new file are listed from that
+    # file alone and looked up in the state.
+    homes = stored.select("conv_id", "src_files")
+    cand = homes.filter(
+        F.arrays_overlap(F.col("src_files"), F.array(*[F.lit(f) for f in affected]))
+        if affected
+        else F.lit(False)
+    )
     if changed:
         new_ids = (
             spark.read.schema(schema)
@@ -174,7 +177,7 @@ def plan_pruned_scan(
             .select("conv_id")
             .distinct()
         )
-        cand_ids = cand_ids.unionByName(new_ids).distinct()
+        cand = cand.unionByName(new_ids.join(homes, "conv_id", "left"))
     # Home files must cover EVERY candidate with stored rows — including
     # conversations discovered only inside a changed/new file (a new data
     # file appending turns to an existing conversation is the common
@@ -183,24 +186,19 @@ def plan_pruned_scan(
     # file alone would silently drop the old rows' facts.
     #
     # ONE capped collect returns both the candidate id set and the home
-    # sets (the previous two-job form — checkpoint the ids, then collect
-    # the joined home files — paid an extra scheduler round-trip on every
-    # warm run); under the cap the ids come back as a driver-built local
-    # relation (broadcast-sized for the downstream semi-joins), over it
-    # the original two-job plan runs (correct, just not fused).
-    cand_rows = cand_ids.join(
-        stored.select("conv_id", "src_files"), "conv_id", "left"
-    ).take(MAX_FUSED_CAND_IDS + 1)
+    # sets (a conversation found both ways comes back twice). Under the
+    # cap the ids stay a driver list, which every downstream consumer
+    # applies as a pushed predicate; over it the ids are checkpointed and
+    # joined (correct, just not fused).
+    cand_rows = cand.take(MAX_FUSED_CAND_IDS + 1)
     if len(cand_rows) <= MAX_FUSED_CAND_IDS:
         home_files = sorted(
             {f for r in cand_rows if r["src_files"] for f in r["src_files"]}
         )
-        cand_ids = spark.createDataFrame(
-            [(r["conv_id"],) for r in cand_rows], "conv_id string"
-        )
+        cand_ids = sorted({r["conv_id"] for r in cand_rows})
     else:
         # delta-sized; consumed by several joins downstream
-        cand_ids = cand_ids.localCheckpoint(eager=True)
+        cand_ids = cand.select("conv_id").distinct().localCheckpoint(eager=True)
         home_files = [
             r["f"]
             for r in stored.join(cand_ids, "conv_id", "left_semi")
@@ -213,7 +211,7 @@ def plan_pruned_scan(
         scoped_raw = spark.read.schema(schema).parquet(*files_needed)
     else:
         scoped_raw = spark.createDataFrame([], schema)
-    carried = stored.join(cand_ids, "conv_id", "left_anti").select(
+    carried = keep_ids(stored, cand_ids, anti=True).select(
         "conv_id",
         "content_hash",
         "rows_in",

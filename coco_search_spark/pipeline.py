@@ -26,7 +26,7 @@ import time
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from coco_search_spark.operators.canonicalize import canonicalize_surfaces
@@ -36,9 +36,12 @@ from coco_search_spark.operators.materialize import build_nodes, resolve_edges
 from coco_search_spark.operators.segments import segment_turns
 from coco_search_spark.operators.validate import split_quarantine
 from coco_search_spark.state import (
+    POINTER_COLS,
+    PUSHDOWN_LIMIT,
     StateStore,
     conversation_hashes,
     diff_against_state,
+    keep_ids,
     resolve_parts,
 )
 
@@ -159,9 +162,12 @@ class _Run:
         conversation_hashes(<input scan>) — state-independent — so Spark's
         CacheManager would match a later run's identical plan and serve THIS
         run's hashes even after the input files changed. Result-exposed
-        caches (triples, edges, nodes) stay: their plans include the
-        per-run dirty_ids checkpoint or version-pathed state reads, which
-        never collide."""
+        caches (edges, nodes, freshly computed canon labels) stay: their
+        plans read this run's own checkpoints (extraction, link map,
+        surfaces), which never collide. Reused canon labels are never
+        cached: they are read lazily from the persisted part, so a later
+        run reusing the same part finds nothing of this run's in the
+        cache."""
         self._pool.shutdown(wait=True, cancel_futures=True)
         for df in self._cached:
             df.unpersist()
@@ -179,7 +185,10 @@ class _Scope:
     dirty: DataFrame
     cur_hashes: DataFrame | None = None
     diff: DataFrame | None = None
-    dirty_ids: DataFrame | None = None
+    # (conv_id, status) of every conversation that is not 'unchanged', from
+    # the diff stage's one capped collect; None above PUSHDOWN_LIMIT
+    status_rows: list | None = None
+    dirty_ids: list | DataFrame | None = None
     # (conv_id, written_version) of the unchanged conversations: the part
     # pointers their reloaded facts/chunks resolve against
     unchanged_versions: DataFrame | None = None
@@ -193,6 +202,14 @@ class _Scope:
     facts_parts: list | None = None
     chunks_parts: list | None = None
     edges_parts: list | None = None
+
+    def ids(self, *statuses: str) -> list | DataFrame:
+        """The conversations with these diff statuses: a driver list under
+        the cap (state.keep_ids applies it as a pushed predicate), a
+        conv_id frame over the diff above it."""
+        if self.status_rows is not None:
+            return [c for c, st in self.status_rows if st in statuses]
+        return self.diff.filter(F.col("status").isin(*statuses)).select("conv_id")
 
 
 @dataclass(frozen=True)
@@ -240,7 +257,7 @@ class _Edges:
     link_map: DataFrame
     edges: DataFrame
     standalone_ids: DataFrame
-    edge_dirty_ids: DataFrame | None
+    edge_dirty_ids: list | DataFrame | None
     n_edge_dirty: int | None
     n_moved: int | None
     edges_dirty: DataFrame | None
@@ -323,8 +340,10 @@ def _run_stages(run: _Run, transcripts: DataFrame) -> PipelineResult:
     # them while extraction saturates the cores
     old_rep_f = None
     if gates.vocab_delta:
-        replaced = scope.diff.filter(F.col("status").isin("changed", "deleted"))
-        old_rep_f = _prefetch(run, "prefetch: replaced facts", "facts", replaced)
+        old_rep_f = _prefetch(
+            run, "prefetch: replaced facts", "facts", scope.facts_parts,
+            scope.ids("changed", "deleted"),
+        )
     # segments feed BOTH the extraction and the chunk projection. On DELTA
     # runs the table is delta-sized and one materialization saves the
     # second segmentation pass outright. On FULL runs it must stay lazy:
@@ -378,8 +397,10 @@ def _run_stages(run: _Run, transcripts: DataFrame) -> PipelineResult:
     # is provably exact); a moved-surface run discards it (read-only waste).
     prev_edges_f = None
     if gates.edge_delta:
-        replaced = scope.diff.filter(F.col("status") != "unchanged")
-        prev_edges_f = _prefetch(run, "prefetch: replaced edges", "edges", replaced)
+        prev_edges_f = _prefetch(
+            run, "prefetch: replaced edges", "edges", scope.edges_parts,
+            scope.ids("new", "changed", "deleted"),
+        )
 
     linked = _link_canon(run, scope, facts)
     run.stamp("link_canonicalize")
@@ -393,9 +414,13 @@ def _run_stages(run: _Run, transcripts: DataFrame) -> PipelineResult:
         )
 
     n_quarantined, _ = quarantine_f.result()
-    nodes_mode = "carry"
     if nodes_f is not None:
-        nodes, nodes_mode = nodes_f.result()
+        nodes, nodes_mode, n_nodes = nodes_f.result()
+    else:
+        # carry runs count the (current) on-disk table instead of forcing
+        # the lazy full rebuild held for res.nodes consumers
+        nodes_mode = "carry"
+        n_nodes = spark.read.parquet(os.path.join(out_dir, "nodes")).count()
     prune = scope.prune
     metrics = {
         "n_triples": facts.kind_counts.get("triple", 0),
@@ -419,13 +444,7 @@ def _run_stages(run: _Run, transcripts: DataFrame) -> PipelineResult:
         "n_files_scanned": len(prune.scanned_files) if prune is not None else None,
         "n_files_total": prune.n_files_total if prune is not None else None,
         "n_files_changed": prune.n_changed_files if prune is not None else None,
-        # carry runs count the (current) on-disk table instead of forcing
-        # the lazy full rebuild held for res.nodes consumers
-        "n_nodes": (
-            spark.read.parquet(os.path.join(out_dir, "nodes")).count()
-            if nodes_mode == "carry"
-            else nodes.count()
-        ),
+        "n_nodes": n_nodes,
         "nodes_mode": nodes_mode,
         # vocabulary receipt: "delta" ⇒ surfaces/bindings/standalone sets
         # and kind totals were maintained from the delta (no corpus-union
@@ -457,15 +476,27 @@ def _run_stages(run: _Run, transcripts: DataFrame) -> PipelineResult:
     )
 
 
-def _prefetch(run: _Run, label: str, kind: str, replaced: DataFrame) -> Future:
+def _prefetch(run: _Run, label: str, kind: str, parts: list, ids) -> Future:
     """Background indexed fetch of the replaced conversations' previous
-    ``kind`` rows, checkpointed: delta-sized, and consumed more than once."""
-    ids = replaced.select("conv_id")
+    ``kind`` rows, checkpointed: delta-sized, and consumed more than once.
+    The part pointers come from the run's cached state table (no re-read of
+    the state parquet) and ``ids`` from the diff stage's collect (no
+    second one)."""
+    versions = run.stored.select(
+        "conv_id", F.col(POINTER_COLS[kind]).alias("written_version")
+    )
     return run.bg(
         "prefetch_" + kind,
         label,
-        lambda: run.store.read_convs(run.spark, kind, ids)[0].localCheckpoint(eager=True),
+        lambda: resolve_parts(run.spark, parts, versions, ids).localCheckpoint(eager=True),
     )
+
+
+def _id_frame(spark: SparkSession, ids) -> DataFrame:
+    """An id set (a driver list or a conv_id frame) as a conv_id frame."""
+    if isinstance(ids, DataFrame):
+        return ids.select("conv_id")
+    return spark.createDataFrame([(i,) for i in ids], "conv_id string")
 
 
 # ---- stage: scope/diff --------------------------------------------------
@@ -515,9 +546,7 @@ def _scope(run: _Run, transcripts: DataFrame) -> _Scope:
     # everyone else carries the stored hash (+ home set + advisory error
     # count). Input that is not a plain file scan has no home sets.
     hashed = conversation_hashes(
-        transcripts.join(prune.cand_ids, "conv_id", "left_semi")
-        if prune is not None
-        else transcripts,
+        keep_ids(transcripts, prune.cand_ids) if prune is not None else transcripts,
         with_files=cur_manifest is not None,
     )
     if cur_manifest is None:
@@ -561,19 +590,35 @@ def _scope(run: _Run, transcripts: DataFrame) -> _Scope:
         # all statically known.
         s.n_dirty = -1  # unknown; only ever compared under a delta run
     else:
-        # ONE aggregation for every diff-status count (the naive form —
-        # one filtered count per status — pays three scheduler round-trips
-        # for the same cached scan; warm-run latency is job-count-bound)
-        counts = {
-            r["status"]: r["n"]
-            for r in diff.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
+        # ONE capped aggregation answers every diff-status count AND lists
+        # the conversations that are not unchanged: one row per such
+        # conversation plus one count row for the unchanged ones (warm-run
+        # latency is job-count-bound). The listed ids feed every later id
+        # restriction of the run — the dirty scan, both prefetches, the
+        # edge-dirty set and the state rows — as pushed predicates. Above
+        # PUSHDOWN_LIMIT rows the listing is dropped: the counts come from a
+        # plain status aggregation and the id sets stay diff frames.
+        tally = diff.groupBy(
+            "status",
+            F.when(F.col("status") != "unchanged", F.col("conv_id")).alias("conv_id"),
+        ).agg(F.count(F.lit(1)).alias("n"))
+        # at most one row (the unchanged count) has no conv_id, so a
+        # truncated take always lists more than PUSHDOWN_LIMIT ids
+        rows = tally.take(PUSHDOWN_LIMIT + 2)
+        listed = [(r["conv_id"], r["status"]) for r in rows if r["conv_id"] is not None]
+        if len(listed) <= PUSHDOWN_LIMIT:
+            s.status_rows = listed
+        else:
+            rows = diff.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()
+        counts: dict[str, int] = {}
+        for r in rows:
+            counts[r["status"]] = counts.get(r["status"], 0) + r["n"]
         run.fine("diff_counts")
         s.n_unchanged = counts.get("unchanged", 0)
         s.n_dirty = counts.get("new", 0) + counts.get("changed", 0)
         s.n_deleted = counts.get("deleted", 0)
-        s.dirty_ids = diff.filter(F.col("status").isin("new", "changed")).select("conv_id")
-        s.dirty = transcripts.join(s.dirty_ids, "conv_id", "left_semi")
+        s.dirty_ids = s.ids("new", "changed")
+        s.dirty = keep_ids(transcripts, s.dirty_ids)
     run.stamp("diff_scan")
     # provenance gate: stored facts produced under a different config /
     # grammar identity must not be mixed into this run's output.
@@ -618,10 +663,11 @@ def _scope(run: _Run, transcripts: DataFrame) -> _Scope:
         # alone would silently drop their standalone mentions (degree-0
         # nodes) and alias bindings (cluster merges) from this run's output.
         # Previous CHUNKS are read only by a compaction run.
-        s.unchanged_versions = stored.select("conv_id", "written_version").join(
-            diff.filter(F.col("status") == "unchanged").select("conv_id"),
-            "conv_id",
-            "left_semi",
+        # every stored conversation is unchanged, changed or deleted
+        s.unchanged_versions = keep_ids(
+            stored.select("conv_id", "written_version"),
+            s.ids("changed", "deleted"),
+            anti=True,
         )
         s.prev_facts = resolve_parts(spark, s.facts_parts, s.unchanged_versions)
         return s
@@ -779,25 +825,33 @@ def _extract(
                 old_vocab, vocab_contrib_delta(dirty_facts, old_rep)
             ).localCheckpoint(eager=True)
             run.fine("vocab_delta_ckpt")
+            # per-kind fact totals by the same delta arithmetic — ONE
+            # signed aggregation instead of a corpus groupBy; the same job
+            # counts the negative refcounts for the invariant below
+            rows = (
+                dirty_facts.select("kind", F.lit(1).alias("sgn"), F.lit(0).alias("neg"))
+                .unionAll(old_rep.select("kind", F.lit(-1).alias("sgn"), F.lit(0).alias("neg")))
+                .unionAll(
+                    cand.filter(F.col("cnt") < 0).select(
+                        F.lit(None).cast("string").alias("kind"),
+                        F.lit(0).alias("sgn"),
+                        F.lit(1).alias("neg"),
+                    )
+                )
+                .groupBy("kind")
+                .agg(F.sum("sgn").alias("net"), F.sum("neg").alias("neg"))
+                .collect()
+            )
+            net = {r["kind"]: r["net"] for r in rows}
+            run.fine("kind_net")
             # loud invariant: a negative refcount means the subtracted
             # facts were not what the snapshot held — recompute from the
             # corpus rather than persist a corrupt vocabulary
-            if cand.filter(F.col("cnt") < 0).limit(1).count() > 0:
+            if sum(r["neg"] for r in rows) > 0:
                 cand.unpersist()
             else:
                 vocab = cand.filter(F.col("cnt") > 0)
                 vocab_mode = "delta"
-                # per-kind fact totals by the same delta arithmetic — ONE
-                # signed aggregation instead of a corpus groupBy
-                net = {
-                    r["kind"]: r["net"]
-                    for r in dirty_facts.select("kind", F.lit(1).alias("sgn"))
-                    .unionAll(old_rep.select("kind", F.lit(-1).alias("sgn")))
-                    .groupBy("kind")
-                    .agg(F.sum("sgn").alias("net"))
-                    .collect()
-                }
-                run.fine("kind_net")
                 prev_totals = run.snap["fact_kind_counts"]
                 kind_counts = {
                     k: int(prev_totals.get(k, 0)) + int(net.get(k, 0))
@@ -865,13 +919,15 @@ def _quarantine(run: _Run, s: _Scope) -> tuple[int, DataFrame | None]:
     # after the data was fixed must not leave the previous run's rows
     # contradicting n_quarantined_turns=0
     q = q.localCheckpoint(eager=True)
-    _write(q, q_path)
+    # the write itself counts the rows (an observed metric: no extra job)
+    written = Observation()
+    _write(q.observe(written, F.count(F.lit(1)).alias("n")), q_path)
     # hand the checkpoint to the state-row builder: its per-conv error
     # counts would otherwise re-scan the corpus. Carried prev rows belong
     # only to carried conversations (their files were not re-scanned),
     # whose errors_col reads stored_errors — so counting from this table
     # is value-identical.
-    return q.count(), q
+    return written.get["n"], q
 
 
 # ---- stage: link + canonicalize -----------------------------------------
@@ -914,12 +970,6 @@ def _link_canon(run: _Run, s: _Scope, f: _Facts) -> _Linked:
             .distinct()
             .localCheckpoint(eager=True)
         )
-    # counted once (reused in metrics): gates the count-based broadcast
-    # hints — under the budget the vocabulary tables get an explicit
-    # broadcast (no AQE conversion overhead); over it (the 10^9-surface
-    # contingency) every join keeps its sort-merge fallback
-    n_surfaces = surfaces.count()
-    run.fine("n_surfaces")
     # distinct binding pairs: vocabulary-sized from the maintained
     # refcounts on delta runs; a corpus-union distinct otherwise. Both the
     # canon fingerprint and the CC extra edges consume this — duplicates
@@ -938,30 +988,45 @@ def _link_canon(run: _Run, s: _Scope, f: _Facts) -> _Linked:
     # missing table, or fingerprint drift recomputes. The fingerprint is
     # the catalog gate's two-fold content identity over 's:'-tagged
     # surfaces plus 'b:'-tagged DISTINCT binding pairs.
+    #
+    # n_surfaces is counted once (reused in metrics): it gates the
+    # count-based broadcast hints — under the budget the vocabulary tables
+    # get an explicit broadcast (no AQE conversion overhead); over it (the
+    # 10^9-surface contingency) every join keeps its sort-merge fallback.
+    # With a store, the fingerprint's aggregation counts it too.
     canon_in_fp = prev_canon = None
     if run.store is not None:
-        from coco_search_spark.operators.link_state import catalog_fingerprint
+        from coco_search_spark.operators.link_state import fingerprint_and_count
 
         # distinct AFTER the concat: the fingerprint folds the tagged
         # STRING set, and two distinct pairs can collide as strings — both
         # derivation modes must fold the identical row set or the reuse
         # gate would never match across a mode switch
-        canon_in_fp = catalog_fingerprint(
+        canon_in_fp, n_surfaces = fingerprint_and_count(
             surfaces.select(F.concat(F.lit("s:"), F.col("surface")).alias("k")).unionByName(
                 binding_pairs.select(
                     F.concat_ws("→", F.lit("b:"), "target", "alias").alias("k")
                 ).distinct()
-            )
+            ),
+            F.col("k").startswith("s:"),
         )
         canon_path = _live_path(snap, "canon_path")
         if s.config_compatible and canon_path and snap.get("canon_fp") == canon_in_fp:
             prev_canon = spark.read.parquet(canon_path)
+    else:
+        n_surfaces = surfaces.count()
+    run.fine("n_surfaces")
     # linking and canonicalization are INDEPENDENT consumers of the same
     # checkpointed surface table — run both on the pool so Spark
     # interleaves their (vocabulary-sized, scheduling-bound) jobs. Each
     # materializes its result, so the overlap is real. Unlabelled: their
     # jobs belong to the link_canonicalize window.
-    links_f = run.bg("link", None, lambda: _link(run, s.prev_links, surfaces, n_surfaces))
+    # a matched canon fingerprint proves the surface set is the previous
+    # run's, so reusable links need no delta split
+    same_surfaces = prev_canon is not None
+    links_f = run.bg(
+        "link", None, lambda: _link(run, s.prev_links, surfaces, n_surfaces, same_surfaces)
+    )
     canon_f = run.bg("canon", None, lambda: _canon(cfg, surfaces, binding_pairs, prev_canon))
     surface_links, n_fresh, n_reused = links_f.result()
     return _Linked(
@@ -978,13 +1043,18 @@ def _link_canon(run: _Run, s: _Scope, f: _Facts) -> _Linked:
 
 
 def _link(
-    run: _Run, prev_links: DataFrame | None, surfaces: DataFrame, n_surfaces: int
+    run: _Run,
+    prev_links: DataFrame | None,
+    surfaces: DataFrame,
+    n_surfaces: int,
+    same_surfaces: bool,
 ) -> tuple[DataFrame, int, int]:
     """→ (links, n_fresh, n_reused). With a reusable previous link table
     (catalog fp + config identity both matched), only the vocabulary delta
     is scored; reused rows are value-identical to a re-score by per-surface
     purity, so the merged output equals a full re-link row for row
-    (test_link_state asserts it)."""
+    (test_link_state asserts it). ``same_surfaces``: the canon-input
+    fingerprint matched, so the surface set is the previous run's."""
     if run.catalog is None:
         return (
             surfaces.select(
@@ -996,6 +1066,13 @@ def _link(
             0,
             0,
         )
+    if prev_links is not None and same_surfaces:
+        # identity-proven reuse, no jobs: the persisted table holds one row
+        # per previous surface (no-link rows included) and the surface set
+        # is unchanged, so the delta split would find nothing to score and
+        # keep every row — the same exactness argument as the links_path
+        # pointer carry. Read lazily; _edges checkpoints the link map.
+        return prev_links.filter(F.col("entity_id").isNotNull()), 0, n_surfaces
     cfg = run.cfg
     mentions = surfaces.select(F.col("surface").alias("mention"))
     reusable = None
@@ -1033,9 +1110,9 @@ def _link(
 
 def _canon(cfg, surfaces: DataFrame, binding_pairs: DataFrame, prev: DataFrame | None):
     if prev is not None:
-        c = prev.cache()
-        c.count()
-        return c
+        # reused labels are read lazily: their one consumer in the run is
+        # the link map, which _edges checkpoints
+        return prev
     # in-text alias bindings ("TARGET as ALIAS") are explicit same-entity
     # evidence fed into the similarity graph — they merge surfaces sharing
     # no shingles/tokens (the aliased-import analog)
@@ -1060,11 +1137,15 @@ def _edges(run: _Run, s: _Scope, g: Gates, f: _Facts, L: _Linked) -> _Edges:
     """Resolve the edge plan and decide which conversations' edges this run
     rewrites."""
     spark, cfg = run.spark, run.cfg
-    # canonical id: linked entity id wins, else the surface's canonical form
+    # canonical id: linked entity id wins, else the surface's canonical
+    # form. Vocabulary-sized and read by every later vocabulary consumer
+    # (the edge resolves, the standalone ids, the move diff, the link-map
+    # sink): materialized once instead of re-planned by each.
     link_map = (
         L.canon.withColumnRenamed("surface", "mention")
         .join(L.surface_links.select("mention", "entity_id"), "mention", "left")
         .select("mention", F.coalesce("entity_id", "canon_id").alias("canon_id"))
+        .localCheckpoint(eager=True)
     )
     # lazy full edge plan: the cold path and res.edges consumers force it;
     # warm delta runs never materialize the corpus-wide join (dirty edges
@@ -1129,7 +1210,11 @@ def _edges(run: _Run, s: _Scope, g: Gates, f: _Facts, L: _Linked) -> _Edges:
         out.n_moved = moved.count()
     run.fine("linkmap_diff")
     if out.n_moved == 0:
-        out.edge_dirty_ids = s.dirty_ids.localCheckpoint(eager=True)
+        out.edge_dirty_ids = (
+            s.dirty_ids
+            if isinstance(s.dirty_ids, list)
+            else s.dirty_ids.localCheckpoint(eager=True)
+        )
         out.n_edge_dirty = s.n_dirty
     elif out.n_moved <= cfg.broadcast_surface_limit:
         # conversations whose triples mention a moved surface: two
@@ -1149,7 +1234,10 @@ def _edges(run: _Run, s: _Scope, g: Gates, f: _Facts, L: _Linked) -> _Edges:
             )
         )
         out.edge_dirty_ids = (
-            s.dirty_ids.unionByName(affected).distinct().localCheckpoint(eager=True)
+            _id_frame(spark, s.dirty_ids)
+            .unionByName(affected)
+            .distinct()
+            .localCheckpoint(eager=True)
         )
         out.n_edge_dirty = out.edge_dirty_ids.count()
         run.fine("edge_dirty_ids")
@@ -1169,14 +1257,17 @@ def _edges(run: _Run, s: _Scope, g: Gates, f: _Facts, L: _Linked) -> _Edges:
         dirty_triples = split_extracted(f.dirty_facts)[0]
         if out.n_moved:
             extra = run.store.read_convs(
-                spark, "facts", out.edge_dirty_ids.join(s.dirty_ids, "conv_id", "left_anti")
+                spark, "facts", keep_ids(out.edge_dirty_ids, s.dirty_ids, anti=True)
             )[0]
             dirty_triples = dirty_triples.unionByName(
                 split_extracted(extra)[0], allowMissingColumns=True
             )
     else:
-        dirty_triples = f.triples.join(out.edge_dirty_ids, "conv_id", "left_semi")
-    out.edges_dirty = resolve_edges(dirty_triples, link_map, links_small=L.links_small)
+        dirty_triples = keep_ids(f.triples, out.edge_dirty_ids)
+    # delta-sized, and read by both the edge sink and the degree delta
+    out.edges_dirty = resolve_edges(
+        dirty_triples, link_map, links_small=L.links_small
+    ).localCheckpoint(eager=True)
     return out
 
 
@@ -1231,15 +1322,14 @@ def _nodes(
     return run.bg("nodes", "nodes: full build", lambda: _nodes_full(e)), None
 
 
-def _nodes_full(e: _Edges) -> tuple[DataFrame, str]:
+def _nodes_full(e: _Edges) -> tuple[DataFrame, str, int]:
     n = build_nodes(e.edges, extra_entities=e.standalone_ids).cache()
-    n.count()
-    return n, "full"
+    return n, "full", n.count()
 
 
 def _nodes_delta(
     run: _Run, s: _Scope, e: _Edges, prev_edges_f: Future
-) -> tuple[DataFrame, str]:
+) -> tuple[DataFrame, str, int]:
     from coco_search_spark.operators.materialize import apply_degree_delta, degree_delta
 
     if e.n_moved == 0:
@@ -1251,10 +1341,7 @@ def _nodes_delta(
         prev_edges = run.store.read_convs(
             run.spark,
             "edges",
-            s.diff.filter(F.col("status") == "deleted")
-            .select("conv_id")
-            .unionByName(e.edge_dirty_ids)
-            .distinct(),
+            _id_frame(run.spark, s.ids("deleted")).unionByName(e.edge_dirty_ids).distinct(),
         )[0]
     # ONE signed aggregation for the degree delta (contrib(new) −
     # contrib(old) over the signed endpoint union); materialized BEFORE the
@@ -1267,11 +1354,15 @@ def _nodes_delta(
     ).localCheckpoint(eager=True)
     # loud invariant: a negative degree means the subtracted edge set was
     # not what the snapshot held — rebuild instead of persisting a corrupt
-    # table (cheap check, vocabulary-sized)
+    # table. One aggregation over the checkpoint counts both the negative
+    # rows and the nodes (the n_nodes metric).
     negative = (F.col("out_degree") < 0) | (F.col("in_degree") < 0)
-    if cand.filter(negative).limit(1).count() > 0:
+    probe = cand.agg(
+        F.count(F.when(negative, 1)).alias("negative"), F.count(F.lit(1)).alias("n")
+    ).collect()[0]
+    if probe["negative"] > 0:
         return _nodes_full(e)
-    return cand, "delta"
+    return cand, "delta", probe["n"]
 
 
 # ---- stage: sinks --------------------------------------------------------
@@ -1446,7 +1537,7 @@ def _state_rows(
         # written_version: dirty conversations' rows went into THIS run's
         # part; unchanged ones keep the version of the part that last
         # wrote them — the pointer state.resolve_parts resolves against
-        base = base.join(s.diff.select("conv_id", "status"), "conv_id", "left").join(
+        base = _flag(base, s.dirty_ids, "_dirty").join(
             run.stored.select(
                 "conv_id",
                 F.col("written_version").alias("prev_wv"),
@@ -1461,7 +1552,7 @@ def _state_rows(
         # resolution drop their rows on the NEXT run. Their facts live in
         # the legacy full part, which table_parts surfaces as parts[0];
         # coalesce the pointer to its version.
-        wv_col = F.when(F.col("status").isin("new", "changed"), F.lit(version)).otherwise(
+        wv_col = F.when(F.col("_dirty"), F.lit(version)).otherwise(
             F.coalesce(F.col("prev_wv"), F.lit(s.facts_parts[0]["version"]))
         )
     # edges pointer: NULL when no versioned edge parts exist (out_dir
@@ -1472,7 +1563,7 @@ def _state_rows(
     if edges_parts is None:
         ewv_col = F.lit(None)
     elif e.edge_dirty_ids is not None:
-        base = base.join(e.edge_dirty_ids.withColumn("_edirty", F.lit(True)), "conv_id", "left")
+        base = _flag(base, e.edge_dirty_ids, "_edirty")
         ewv_col = F.when(F.col("_edirty"), F.lit(version)).otherwise(
             F.coalesce(F.col("prev_ewv"), F.lit(s.edges_parts[0]["version"]))
         )
@@ -1488,6 +1579,17 @@ def _state_rows(
         ewv_col.cast("bigint").alias("edges_wv"),
         F.col("src_files"),
     )
+
+
+def _flag(df: DataFrame, ids, name: str) -> DataFrame:
+    """``df`` plus a boolean column ``name``: its conversation is in
+    ``ids`` (a driver list: a predicate; a distinct conv_id frame: a
+    join)."""
+    if isinstance(ids, DataFrame):
+        return df.join(ids.select("conv_id", F.lit(True).alias(name)), "conv_id", "left").fillna(
+            False, subset=[name]
+        )
+    return df.withColumn(name, F.coalesce(F.col("conv_id").isin(list(ids)), F.lit(False)))
 
 
 def _commit(

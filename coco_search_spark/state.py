@@ -189,42 +189,69 @@ def diff_against_state(current: DataFrame, stored: DataFrame) -> DataFrame:
     )
 
 
+def keep_ids(df: DataFrame, ids, anti: bool = False) -> DataFrame:
+    """``df`` restricted to the conversations in ``ids`` (``anti``: to the
+    ones outside it). A driver-side id list becomes an ``isin`` predicate:
+    no join and no shuffle, and a parquet scan skips the row groups whose
+    conv_id stats miss it. A ``conv_id`` frame (an id set above
+    PUSHDOWN_LIMIT) is joined instead. Null conv_ids fall outside every id
+    set, as they do under the join."""
+    if isinstance(ids, DataFrame):
+        return df.join(ids.select("conv_id"), "conv_id", "left_anti" if anti else "left_semi")
+    hit = F.col("conv_id").isin(list(ids))
+    return df.filter(~F.coalesce(hit, F.lit(False)) if anti else hit)
+
+
 def resolve_parts(
     spark: SparkSession,
     parts: list[dict],
     versions: DataFrame,
-    restrict=None,
+    ids=None,
 ) -> DataFrame:
     """Current rows of a delta-written table for the conversations in
     ``versions`` (conv_id, written_version): each conversation's
     authoritative rows live in the part whose version equals its pointer,
-    so resolution is one semi-join per part (parts are bounded by
-    COMPACT_PARTS_AFTER) and stale rows of since-changed conversations in
-    older parts are skipped. A single part holds at LEAST those rows but
-    can hold more — a no-op run after deletions carries the part forward,
-    so since-deleted conversations' rows are still in the files — and the
-    semi-join against ``versions`` drops them. ``restrict`` (a Column) is
-    pushed into every part scan and into ``versions``."""
-    if restrict is not None:
-        versions = versions.filter(restrict)
+    and stale rows of since-changed conversations in older parts are
+    skipped. A single part holds at LEAST those rows but can hold more — a
+    no-op run after deletions carries the part forward, so since-deleted
+    conversations' rows are still in the files — and the semi-join against
+    ``versions`` drops them.
 
-    def scan(path: str) -> DataFrame:
-        rows = spark.read.parquet(path)
-        return rows if restrict is None else rows.filter(restrict)
-
+    One scan and one join for any number of parts, not one join per part:
+    every part is read under one schema (the newest part's, inferred once;
+    the columns an older part lacks read as typed NULLs, the
+    ensure_columns rule), each row is tagged with the version of the part
+    its file path belongs to, and one semi-join on (conv_id, version) keeps
+    the current rows. ``ids`` (a list or a conv_id frame, see
+    :func:`keep_ids`) restricts ``versions`` and, as a pushed predicate,
+    every part scan."""
+    if ids is not None:
+        versions = keep_ids(versions, ids)
+    schema = spark.read.parquet(parts[-1]["path"]).schema
+    scans = [spark.read.schema(schema).parquet(p["path"]) for p in parts]
+    rows = scans[0]
+    for scan in scans[1:]:
+        rows = rows.unionByName(scan)
+    if ids is not None and not isinstance(ids, DataFrame):
+        rows = keep_ids(rows, ids)
     if len(parts) == 1:
-        return scan(parts[0]["path"]).join(versions.select("conv_id"), "conv_id", "left_semi")
-    out = None
-    for p in parts:
-        rows = scan(p["path"]).join(
-            versions.filter(F.col("written_version") == p["version"]).select("conv_id"),
-            "conv_id",
-            "left_semi",
+        return rows.join(versions.select("conv_id"), "conv_id", "left_semi")
+    # the part version from the file path, projected ABOVE the union: a
+    # per-scan literal tag would let the optimizer push the semi-join into
+    # every union branch (one join per part again)
+    part_v = F.lit(None).cast("bigint")
+    for p, scan in zip(parts, scans):
+        part_v = F.when(F.input_file_name().isin(scan.inputFiles()), p["version"]).otherwise(
+            part_v
         )
-        # allowMissingColumns: parts written by different engine versions
-        # may differ in columns (same evolution rule as ensure_columns)
-        out = rows if out is None else out.unionByName(rows, allowMissingColumns=True)
-    return out
+    current = versions.select(
+        "conv_id", F.col("written_version").cast("bigint").alias("_part_v")
+    )
+    return (
+        rows.withColumn("_part_v", part_v)
+        .join(current, ["conv_id", "_part_v"], "left_semi")
+        .drop("_part_v")
+    )
 
 
 class StateStore:
@@ -615,7 +642,7 @@ class StateStore:
         self,
         spark: SparkSession,
         kind: str,
-        conv_ids: list[str] | None = None,
+        conv_ids=None,
         version: int | None = None,
     ) -> DataFrame:
         """Resolve a delta-written table (``facts`` / ``chunks``) to its
@@ -627,7 +654,8 @@ class StateStore:
         table. Deleted conversations drop out naturally — they have no
         state row.
 
-        ``conv_ids``: optional restriction to a known id set. Unlike a
+        ``conv_ids``: optional restriction to a known id set — a list, or
+        a ``conv_id`` frame, which is semi-joined. Unlike a
         semi-join (whose build side Parquet never sees), an ``isin`` filter
         reaches the scan as a pushed predicate, so files whose row-group
         conv_id min/max stats miss the set are skipped without reading —
@@ -648,33 +676,30 @@ class StateStore:
         versions = self.read(spark, version=version).select(
             "conv_id", F.col(pointer).alias("written_version")
         )
-        restrict = F.col("conv_id").isin(conv_ids) if conv_ids is not None else None
-        return resolve_parts(spark, parts, versions, restrict)
+        return resolve_parts(spark, parts, versions, conv_ids)
 
     def read_convs(
         self,
         spark: SparkSession,
         kind: str,
-        ids: DataFrame,
+        ids,
         versions: tuple = (None,),
     ) -> list[DataFrame]:
-        """The ``kind`` rows of the conversations in ``ids`` (a ``conv_id``
-        frame), one frame per entry of ``versions`` (None: the current
-        snapshot).
+        """The ``kind`` rows of the conversations in ``ids``, one frame per
+        entry of ``versions`` (None: the current snapshot).
 
-        The ids are collected ONCE, capped at PUSHDOWN_LIMIT (the driver-
-        memory guard), and pushed into every read as an ``isin`` predicate:
-        row groups whose conv_id stats miss the set are skipped unread — an
-        indexed fetch instead of an O(table) scan. Above the cap each read
-        semi-joins ``ids`` instead: correct, just not row-group-pruned."""
-        sample = ids.take(PUSHDOWN_LIMIT + 1)
-        if len(sample) > PUSHDOWN_LIMIT:
-            return [
-                self.read_table(spark, kind, version=v).join(ids, "conv_id", "left_semi")
-                for v in versions
-            ]
-        conv_ids = [r["conv_id"] for r in sample]
-        return [self.read_table(spark, kind, conv_ids=conv_ids, version=v) for v in versions]
+        ``ids`` is a driver list of conv_ids or a ``conv_id`` frame. A frame
+        is collected ONCE, capped at PUSHDOWN_LIMIT (the driver-memory
+        guard); a list is used as it is. Under the cap the ids reach every
+        read as a pushed ``isin`` predicate: row groups whose conv_id stats
+        miss the set are skipped unread — an indexed fetch instead of an
+        O(table) scan. Above the cap each read semi-joins the frame
+        instead: correct, just not row-group-pruned."""
+        if isinstance(ids, DataFrame):
+            sample = ids.select("conv_id").take(PUSHDOWN_LIMIT + 1)
+            if len(sample) <= PUSHDOWN_LIMIT:
+                ids = [r["conv_id"] for r in sample]
+        return [self.read_table(spark, kind, conv_ids=ids, version=v) for v in versions]
 
     def changed_convs(
         self, spark: SparkSession, kind: str, v_from: int, v_to: int | None = None

@@ -138,3 +138,41 @@ def test_canonicalize_leaves_nothing_cached(spark):
     rows = canonicalize_surfaces(surfaces, extra_edges=chain).collect()
     assert len({r["canon_id"] for r in rows if r["surface"] in names[:12]}) == 1
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _frame_rdd_ids(df) -> set[int]:
+    """Ids of the RDDs a frame's plan reads directly (its LogicalRDD leaves:
+    the local checkpoints it was built from)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    ids = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            ids.add(leaf.rdd().id())
+    return ids
+
+
+def test_connected_components_releases_round_checkpoints(spark):
+    """Every round's localCheckpoint blocks except the ones the returned
+    frame reads are released before connected_components returns: after
+    three calls the context's persistent-RDD registry holds its starting
+    entries plus the returned frames' own checkpoints, and the rows are
+    unchanged."""
+    names = [f"n{i:02d}" for i in range(20)]
+    nodes = spark.createDataFrame([(n,) for n in names], "surface string")
+    # an 11-edge chain takes several rounds; the rest are singletons
+    edges = spark.createDataFrame(
+        [(names[i], names[i + 1]) for i in range(11)], "a string, b string"
+    )
+    expected = [(n, names[0] if i <= 11 else n) for i, n in enumerate(names)]
+
+    def registry() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    start = registry()
+    kept = set()
+    for _ in range(3):
+        out = connected_components(nodes, edges)
+        assert sorted(map(tuple, out.collect())) == expected
+        kept |= _frame_rdd_ids(out)
+        assert registry() - start <= kept

@@ -150,6 +150,32 @@ def test_removed_file_tombstones_its_conversations(spark, tmp_path):
     assert state_ids == {"c0", "c1", "c2", "c3"}
 
 
+def test_rehashed_conversations_keep_their_home_files(spark, tmp_path):
+    """A pruned run records the home file of every conversation it
+    re-hashes, so a later removal of that file still tombstones them."""
+    d = _corpus(tmp_path, FILES)
+    out, state = str(tmp_path / "o"), str(tmp_path / "s")
+    run_pipeline(spark, _read(spark, d), out_dir=out, state_dir=state)
+    _write_file(
+        os.path.join(d, "b.parquet"),
+        [("c2", 0, "gamma_svc emits cache2_cache ."), ("c3", 0, "delta_svc emits queue3_queue .")],
+    )
+    r2 = run_pipeline(spark, _read(spark, d), out_dir=out, state_dir=state)
+    assert r2.metrics["n_files_scanned"] == 1
+    store = StateStore(state)
+    homes = {
+        r["conv_id"]: [os.path.basename(f) for f in r["src_files"]]
+        for r in store.read(spark).select("conv_id", "src_files").collect()
+    }
+    assert homes["c2"] == homes["c3"] == ["b.parquet"]
+    os.remove(os.path.join(d, "b.parquet"))
+    run_pipeline(spark, _read(spark, d), out_dir=out, state_dir=state)
+    state_ids = {r["conv_id"] for r in store.read(spark).select("conv_id").collect()}
+    assert state_ids == {"c0", "c1", "c4", "c5"}
+    facts = store.read_table(spark, "facts")
+    assert facts.filter(F.col("conv_id").isin("c2", "c3")).count() == 0
+
+
 def test_conversation_spanning_files_rehashes_full_rowset(spark, tmp_path):
     files = {
         "p1.parquet": [("cx", 0, "alpha_svc calls beta_store .")],
