@@ -53,7 +53,7 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from coco_search_spark.state import keep_ids
+from coco_search_spark.state import IdSet
 
 # When more than this fraction of the input files changed, pruning is a
 # net loss: the scoped path list approaches the whole manifest, and the
@@ -113,9 +113,7 @@ def input_manifest(df: DataFrame) -> dict[str, str] | None:
 @dataclass
 class PrunedScan:
     scoped_raw: DataFrame  # raw rows of every file that must be re-read
-    # conv_ids whose hash must be recomputed: a driver list, or a conv_id
-    # frame above MAX_FUSED_CAND_IDS (state.keep_ids applies either)
-    cand_ids: list | DataFrame
+    cand_ids: IdSet  # conv_ids whose hash must be recomputed
     # stored rows carried forward verbatim:
     # (conv_id, content_hash, rows_in, src_files, stored_errors)
     carried: DataFrame
@@ -187,21 +185,21 @@ def plan_pruned_scan(
     #
     # ONE capped collect returns both the candidate id set and the home
     # sets (a conversation found both ways comes back twice). Under the
-    # cap the ids stay a driver list, which every downstream consumer
-    # applies as a pushed predicate; over it the ids are checkpointed and
-    # joined (correct, just not fused).
+    # cap the ids become an IdSet (a driver list up to PUSHDOWN_LIMIT,
+    # which every downstream consumer applies as one pushed predicate);
+    # over it the ids are checkpointed and joined (correct, just not fused).
     cand_rows = cand.take(MAX_FUSED_CAND_IDS + 1)
     if len(cand_rows) <= MAX_FUSED_CAND_IDS:
         home_files = sorted(
             {f for r in cand_rows if r["src_files"] for f in r["src_files"]}
         )
-        cand_ids = sorted({r["conv_id"] for r in cand_rows})
+        cand_ids = IdSet.of(spark, sorted({r["conv_id"] for r in cand_rows}))
     else:
         # delta-sized; consumed by several joins downstream
-        cand_ids = cand.select("conv_id").distinct().localCheckpoint(eager=True)
+        cand_ids = IdSet(frame=cand.select("conv_id").distinct().localCheckpoint(eager=True))
         home_files = [
             r["f"]
-            for r in stored.join(cand_ids, "conv_id", "left_semi")
+            for r in cand_ids.keep(stored)
             .select(F.explode("src_files").alias("f"))
             .distinct()
             .collect()
@@ -211,7 +209,7 @@ def plan_pruned_scan(
         scoped_raw = spark.read.schema(schema).parquet(*files_needed)
     else:
         scoped_raw = spark.createDataFrame([], schema)
-    carried = keep_ids(stored, cand_ids, anti=True).select(
+    carried = cand_ids.keep(stored, anti=True).select(
         "conv_id",
         "content_hash",
         "rows_in",

@@ -24,7 +24,7 @@ from __future__ import annotations
 import os
 import time
 from concurrent.futures import Future, ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -38,10 +38,10 @@ from coco_search_spark.operators.validate import split_quarantine
 from coco_search_spark.state import (
     POINTER_COLS,
     PUSHDOWN_LIMIT,
+    IdSet,
     StateStore,
     conversation_hashes,
     diff_against_state,
-    keep_ids,
     resolve_parts,
 )
 
@@ -188,7 +188,7 @@ class _Scope:
     # (conv_id, status) of every conversation that is not 'unchanged', from
     # the diff stage's one capped collect; None above PUSHDOWN_LIMIT
     status_rows: list | None = None
-    dirty_ids: list | DataFrame | None = None
+    dirty_ids: IdSet | None = None
     # (conv_id, written_version) of the unchanged conversations: the part
     # pointers their reloaded facts/chunks resolve against
     unchanged_versions: DataFrame | None = None
@@ -202,14 +202,21 @@ class _Scope:
     facts_parts: list | None = None
     chunks_parts: list | None = None
     edges_parts: list | None = None
+    _id_sets: dict = field(default_factory=dict)
 
-    def ids(self, *statuses: str) -> list | DataFrame:
-        """The conversations with these diff statuses: a driver list under
-        the cap (state.keep_ids applies it as a pushed predicate), a
-        conv_id frame over the diff above it."""
-        if self.status_rows is not None:
-            return [c for c, st in self.status_rows if st in statuses]
-        return self.diff.filter(F.col("status").isin(*statuses)).select("conv_id")
+    def ids(self, *statuses: str) -> IdSet:
+        """The conversations with these diff statuses: the listed ids under
+        the cap, a conv_id frame over the diff above it. One IdSet per
+        status combination, so each set's predicate is built once however
+        many reads apply it."""
+        key = frozenset(statuses)
+        if key not in self._id_sets:
+            if self.status_rows is not None:
+                ids = IdSet(ids=[c for c, st in self.status_rows if st in key])
+            else:
+                ids = IdSet(frame=self.diff.filter(F.col("status").isin(*key)).select("conv_id"))
+            self._id_sets[key] = ids
+        return self._id_sets[key]
 
 
 @dataclass(frozen=True)
@@ -250,6 +257,11 @@ class _Linked:
     canon: DataFrame
     canon_in_fp: str | None
     canon_reused: bool
+    # the canon-input fingerprint matched AND the previous link table is
+    # reusable: the surface set, every canon label and every link row are
+    # the previous run's, so the links, the link map and the links_path
+    # pointer are reused as they are, with no job to prove it
+    identity_reuse: bool
 
 
 @dataclass
@@ -257,7 +269,7 @@ class _Edges:
     link_map: DataFrame
     edges: DataFrame
     standalone_ids: DataFrame
-    edge_dirty_ids: list | DataFrame | None
+    edge_dirty_ids: IdSet | None
     n_edge_dirty: int | None
     n_moved: int | None
     edges_dirty: DataFrame | None
@@ -476,7 +488,7 @@ def _run_stages(run: _Run, transcripts: DataFrame) -> PipelineResult:
     )
 
 
-def _prefetch(run: _Run, label: str, kind: str, parts: list, ids) -> Future:
+def _prefetch(run: _Run, label: str, kind: str, parts: list, ids: IdSet) -> Future:
     """Background indexed fetch of the replaced conversations' previous
     ``kind`` rows, checkpointed: delta-sized, and consumed more than once.
     The part pointers come from the run's cached state table (no re-read of
@@ -490,13 +502,6 @@ def _prefetch(run: _Run, label: str, kind: str, parts: list, ids) -> Future:
         label,
         lambda: resolve_parts(run.spark, parts, versions, ids).localCheckpoint(eager=True),
     )
-
-
-def _id_frame(spark: SparkSession, ids) -> DataFrame:
-    """An id set (a driver list or a conv_id frame) as a conv_id frame."""
-    if isinstance(ids, DataFrame):
-        return ids.select("conv_id")
-    return spark.createDataFrame([(i,) for i in ids], "conv_id string")
 
 
 # ---- stage: scope/diff --------------------------------------------------
@@ -546,8 +551,9 @@ def _scope(run: _Run, transcripts: DataFrame) -> _Scope:
     # everyone else carries the stored hash (+ home set + advisory error
     # count). Input that is not a plain file scan has no home sets.
     hashed = conversation_hashes(
-        keep_ids(transcripts, prune.cand_ids) if prune is not None else transcripts,
+        transcripts,
         with_files=cur_manifest is not None,
+        ids=prune.cand_ids if prune is not None else None,
     )
     if cur_manifest is None:
         hashed = hashed.withColumn("src_files", F.lit(None).cast("array<string>"))
@@ -618,7 +624,7 @@ def _scope(run: _Run, transcripts: DataFrame) -> _Scope:
         s.n_dirty = counts.get("new", 0) + counts.get("changed", 0)
         s.n_deleted = counts.get("deleted", 0)
         s.dirty_ids = s.ids("new", "changed")
-        s.dirty = keep_ids(transcripts, s.dirty_ids)
+        s.dirty = s.dirty_ids.keep(transcripts)
     run.stamp("diff_scan")
     # provenance gate: stored facts produced under a different config /
     # grammar identity must not be mixed into this run's output.
@@ -664,10 +670,8 @@ def _scope(run: _Run, transcripts: DataFrame) -> _Scope:
         # nodes) and alias bindings (cluster merges) from this run's output.
         # Previous CHUNKS are read only by a compaction run.
         # every stored conversation is unchanged, changed or deleted
-        s.unchanged_versions = keep_ids(
-            stored.select("conv_id", "written_version"),
-            s.ids("changed", "deleted"),
-            anti=True,
+        s.unchanged_versions = s.ids("changed", "deleted").keep(
+            stored.select("conv_id", "written_version"), anti=True
         )
         s.prev_facts = resolve_parts(spark, s.facts_parts, s.unchanged_versions)
         return s
@@ -1021,11 +1025,9 @@ def _link_canon(run: _Run, s: _Scope, f: _Facts) -> _Linked:
     # interleaves their (vocabulary-sized, scheduling-bound) jobs. Each
     # materializes its result, so the overlap is real. Unlabelled: their
     # jobs belong to the link_canonicalize window.
-    # a matched canon fingerprint proves the surface set is the previous
-    # run's, so reusable links need no delta split
-    same_surfaces = prev_canon is not None
+    identity_reuse = prev_canon is not None and s.prev_links is not None
     links_f = run.bg(
-        "link", None, lambda: _link(run, s.prev_links, surfaces, n_surfaces, same_surfaces)
+        "link", None, lambda: _link(run, s.prev_links, surfaces, n_surfaces, identity_reuse)
     )
     canon_f = run.bg("canon", None, lambda: _canon(cfg, surfaces, binding_pairs, prev_canon))
     surface_links, n_fresh, n_reused = links_f.result()
@@ -1039,6 +1041,7 @@ def _link_canon(run: _Run, s: _Scope, f: _Facts) -> _Linked:
         canon_f.result(),
         canon_in_fp,
         prev_canon is not None,
+        identity_reuse,
     )
 
 
@@ -1047,14 +1050,14 @@ def _link(
     prev_links: DataFrame | None,
     surfaces: DataFrame,
     n_surfaces: int,
-    same_surfaces: bool,
+    identity_reuse: bool,
 ) -> tuple[DataFrame, int, int]:
     """→ (links, n_fresh, n_reused). With a reusable previous link table
     (catalog fp + config identity both matched), only the vocabulary delta
     is scored; reused rows are value-identical to a re-score by per-surface
     purity, so the merged output equals a full re-link row for row
-    (test_link_state asserts it). ``same_surfaces``: the canon-input
-    fingerprint matched, so the surface set is the previous run's."""
+    (test_link_state asserts it). ``identity_reuse``: see
+    :class:`_Linked`."""
     if run.catalog is None:
         return (
             surfaces.select(
@@ -1066,12 +1069,11 @@ def _link(
             0,
             0,
         )
-    if prev_links is not None and same_surfaces:
-        # identity-proven reuse, no jobs: the persisted table holds one row
-        # per previous surface (no-link rows included) and the surface set
-        # is unchanged, so the delta split would find nothing to score and
-        # keep every row — the same exactness argument as the links_path
-        # pointer carry. Read lazily; _edges checkpoints the link map.
+    if identity_reuse:
+        # the persisted table holds one row per previous surface (no-link
+        # rows included) and the surface set is unchanged, so the delta
+        # split would find nothing to score and keep every row. Read
+        # lazily; _edges checkpoints the link map.
         return prev_links.filter(F.col("entity_id").isNotNull()), 0, n_surfaces
     cfg = run.cfg
     mentions = surfaces.select(F.col("surface").alias("mention"))
@@ -1183,14 +1185,10 @@ def _edges(run: _Run, s: _Scope, g: Gates, f: _Facts, L: _Linked) -> _Edges:
     # decision feeds BOTH the edge sink (delta part vs full rewrite) and
     # the node resolution (incremental degree maintenance vs full rebuild).
     # A vocabulary-scale move set falls back to the full paths.
-    if L.canon_reused and s.prev_links is not None and L.n_links_fresh == 0:
-        # identity-proven empty move set, no jobs: link_map = canon ⋈
-        # per-surface links. canon reuse means the canon-input fingerprint
-        # matched — the surface SET and every label are the previous run's
-        # — and zero fresh links over that same surface set means the link
-        # table rows are the previous run's too, so the composed map is
-        # value-identical by construction (the same exactness argument the
-        # links_path pointer carry makes).
+    if L.identity_reuse:
+        # link_map = canon ⋈ per-surface links, both the previous run's:
+        # the composed map is value-identical by construction, so the move
+        # set is empty with no job to diff it
         out.n_moved = 0
     else:
         old_map = spark.read.parquet(run.snap["linkmap_path"])
@@ -1212,8 +1210,8 @@ def _edges(run: _Run, s: _Scope, g: Gates, f: _Facts, L: _Linked) -> _Edges:
     if out.n_moved == 0:
         out.edge_dirty_ids = (
             s.dirty_ids
-            if isinstance(s.dirty_ids, list)
-            else s.dirty_ids.localCheckpoint(eager=True)
+            if s.dirty_ids.frame is None
+            else IdSet(frame=s.dirty_ids.frame.localCheckpoint(eager=True))
         )
         out.n_edge_dirty = s.n_dirty
     elif out.n_moved <= cfg.broadcast_surface_limit:
@@ -1233,13 +1231,14 @@ def _edges(run: _Run, s: _Scope, g: Gates, f: _Facts, L: _Linked) -> _Edges:
                 ).select("conv_id")
             )
         )
-        out.edge_dirty_ids = (
-            _id_frame(spark, s.dirty_ids)
+        edge_dirty = (
+            s.dirty_ids.as_frame(spark)
             .unionByName(affected)
             .distinct()
             .localCheckpoint(eager=True)
         )
-        out.n_edge_dirty = out.edge_dirty_ids.count()
+        out.edge_dirty_ids = IdSet(frame=edge_dirty)
+        out.n_edge_dirty = edge_dirty.count()
         run.fine("edge_dirty_ids")
     else:
         # move set beyond the broadcast budget — cluster churn at that
@@ -1257,13 +1256,13 @@ def _edges(run: _Run, s: _Scope, g: Gates, f: _Facts, L: _Linked) -> _Edges:
         dirty_triples = split_extracted(f.dirty_facts)[0]
         if out.n_moved:
             extra = run.store.read_convs(
-                spark, "facts", keep_ids(out.edge_dirty_ids, s.dirty_ids, anti=True)
+                spark, "facts", s.dirty_ids.keep(out.edge_dirty_ids.frame, anti=True)
             )[0]
             dirty_triples = dirty_triples.unionByName(
                 split_extracted(extra)[0], allowMissingColumns=True
             )
     else:
-        dirty_triples = keep_ids(f.triples, out.edge_dirty_ids)
+        dirty_triples = out.edge_dirty_ids.keep(f.triples)
     # delta-sized, and read by both the edge sink and the degree delta
     out.edges_dirty = resolve_edges(
         dirty_triples, link_map, links_small=L.links_small
@@ -1341,7 +1340,10 @@ def _nodes_delta(
         prev_edges = run.store.read_convs(
             run.spark,
             "edges",
-            _id_frame(run.spark, s.ids("deleted")).unionByName(e.edge_dirty_ids).distinct(),
+            s.ids("deleted")
+            .as_frame(run.spark)
+            .unionByName(e.edge_dirty_ids.as_frame(run.spark))
+            .distinct(),
         )[0]
     # ONE signed aggregation for the degree delta (contrib(new) −
     # contrib(old) over the signed endpoint union); materialized BEFORE the
@@ -1461,11 +1463,11 @@ def _sinks(
             manifest["linkmap_path"] = linkmap_path = run.part("linkmap")
             sinks["linkmap"] = lambda: _write(e.link_map, linkmap_path)
     if run.catalog is not None:
-        if s.prev_links is not None and L.n_links_fresh == 0 and (g.noop or L.canon_reused):
+        if L.identity_reuse or (g.noop and s.prev_links is not None and L.n_links_fresh == 0):
             # Exactness needs the SURFACE SET unchanged, not just zero fresh
             # scores (a shrunk vocabulary leaves n_fresh at 0 while the old
             # table holds stale extra rows): noop gives it by identical
-            # corpus, canon_reused by canon-input fingerprint match (which
+            # corpus, identity_reuse by canon-input fingerprint match (which
             # covers the surface set).
             manifest["links_path"] = snap.get("links_path")
         else:
@@ -1537,7 +1539,7 @@ def _state_rows(
         # written_version: dirty conversations' rows went into THIS run's
         # part; unchanged ones keep the version of the part that last
         # wrote them — the pointer state.resolve_parts resolves against
-        base = _flag(base, s.dirty_ids, "_dirty").join(
+        base = s.dirty_ids.flag(base, "_dirty").join(
             run.stored.select(
                 "conv_id",
                 F.col("written_version").alias("prev_wv"),
@@ -1563,7 +1565,7 @@ def _state_rows(
     if edges_parts is None:
         ewv_col = F.lit(None)
     elif e.edge_dirty_ids is not None:
-        base = _flag(base, e.edge_dirty_ids, "_edirty")
+        base = e.edge_dirty_ids.flag(base, "_edirty")
         ewv_col = F.when(F.col("_edirty"), F.lit(version)).otherwise(
             F.coalesce(F.col("prev_ewv"), F.lit(s.edges_parts[0]["version"]))
         )
@@ -1579,17 +1581,6 @@ def _state_rows(
         ewv_col.cast("bigint").alias("edges_wv"),
         F.col("src_files"),
     )
-
-
-def _flag(df: DataFrame, ids, name: str) -> DataFrame:
-    """``df`` plus a boolean column ``name``: its conversation is in
-    ``ids`` (a driver list: a predicate; a distinct conv_id frame: a
-    join)."""
-    if isinstance(ids, DataFrame):
-        return df.join(ids.select("conv_id", F.lit(True).alias(name)), "conv_id", "left").fillna(
-            False, subset=[name]
-        )
-    return df.withColumn(name, F.coalesce(F.col("conv_id").isin(list(ids)), F.lit(False)))
 
 
 def _commit(

@@ -50,9 +50,12 @@ POINTER_COLS = {
 }
 
 # Max conversation ids collected to the driver for a pushed
-# `conv_id isin(...)` predicate (StateStore.read_convs; ~100 bytes/id →
-# ≤ ~10 MB driver-side). Above it the read keeps the semi-join form.
-PUSHDOWN_LIMIT = 100_000
+# `conv_id IN (...)` predicate (IdSet). Above it the reads keep the
+# semi-join form. The predicate's planning cost grows with its length: a
+# count over a 1M-row, 8-file table (local[2], 4-core VM) took
+# 0.7/0.8/1.0/1.6/3.0/7.0 s filtered by 2k/5k/10k/20k/50k/100k ids, and
+# 1.0-1.2 s semi-joined at every size, so the two cross at about 10k ids.
+PUSHDOWN_LIMIT = 10_000
 
 # Delta-written tables (facts, chunks) fold back into one full part once
 # the part list reaches this length: bounds reader fan-in (and file-listing
@@ -117,7 +120,9 @@ def _align_columns(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
     return a.select(*cols), b.select(*cols)
 
 
-def conversation_hashes(transcripts: DataFrame, with_files: bool = False) -> DataFrame:
+def conversation_hashes(
+    transcripts: DataFrame, with_files: bool = False, ids: IdSet | None = None
+) -> DataFrame:
     """(conv_id, content_hash): sha256 over the ordered concatenation of
     PER-TURN sha256 hashes — stable under (conv_id, turn_idx) ordering
     (flow.py:348-351 content-identity analog, Merkle-style).
@@ -134,12 +139,18 @@ def conversation_hashes(transcripts: DataFrame, with_files: bool = False) -> Dat
     (``src_files``, sorted) from ``input_file_name()`` — the per-conversation
     side of the input-manifest scan pruning (operators/scan_pruning.py).
     Spark rejects non-deterministic expressions inside aggregate functions,
-    so the file name is projected into a column first."""
-    src = (
-        transcripts.withColumn("_src_file", F.input_file_name())
-        if with_files
-        else transcripts
-    )
+    so the file name is projected into a column first.
+
+    ``ids``: hash only these conversations. A listed set filters the scan
+    (a pushed predicate); a joined set applies after the file name is
+    projected, since ``input_file_name()`` above a join's shuffle reads
+    ''."""
+    listed = ids is not None and ids.frame is None
+    src = ids.keep(transcripts) if listed else transcripts
+    if with_files:
+        src = src.withColumn("_src_file", F.input_file_name())
+    if ids is not None and not listed:
+        src = ids.keep(src)
     aggs = [
         F.sha2(
             F.array_join(
@@ -189,24 +200,92 @@ def diff_against_state(current: DataFrame, stored: DataFrame) -> DataFrame:
     )
 
 
-def keep_ids(df: DataFrame, ids, anti: bool = False) -> DataFrame:
-    """``df`` restricted to the conversations in ``ids`` (``anti``: to the
-    ones outside it). A driver-side id list becomes an ``isin`` predicate:
-    no join and no shuffle, and a parquet scan skips the row groups whose
-    conv_id stats miss it. A ``conv_id`` frame (an id set above
-    PUSHDOWN_LIMIT) is joined instead. Null conv_ids fall outside every id
-    set, as they do under the join."""
-    if isinstance(ids, DataFrame):
-        return df.join(ids.select("conv_id"), "conv_id", "left_anti" if anti else "left_semi")
-    hit = F.col("conv_id").isin(list(ids))
-    return df.filter(~F.coalesce(hit, F.lit(False)) if anti else hit)
+class IdSet:
+    """A set of conversation ids, applied to a frame's ``conv_id`` column.
+
+    Up to PUSHDOWN_LIMIT ids the set is a driver list, applied as ONE
+    ``conv_id IN (...)`` predicate that is built on first use and shared
+    by every later read of the set: no join and no shuffle, and a parquet
+    scan skips the row groups whose conv_id stats miss it. A larger set is
+    a frame of distinct conv_ids, which reads join. Null conv_ids fall
+    outside every set, as they do under the join."""
+
+    def __init__(self, ids: list | None = None, frame: DataFrame | None = None):
+        self.ids = ids
+        self.frame = frame
+        self._pred = None
+
+    @staticmethod
+    def of(spark: SparkSession, ids: list) -> IdSet:
+        """A driver id list as a set: a local frame above PUSHDOWN_LIMIT."""
+        if len(ids) <= PUSHDOWN_LIMIT:
+            return IdSet(ids=list(ids))
+        return IdSet(frame=spark.createDataFrame([(i,) for i in ids], "conv_id string"))
+
+    @staticmethod
+    def collect(ids: DataFrame) -> IdSet:
+        """The conv_ids of ``ids``, collected once when at most
+        PUSHDOWN_LIMIT of them (the driver-memory guard), else the frame
+        itself."""
+        ids = ids.select("conv_id")
+        sample = ids.take(PUSHDOWN_LIMIT + 1)
+        if len(sample) <= PUSHDOWN_LIMIT:
+            return IdSet(ids=[r["conv_id"] for r in sample])
+        return IdSet(frame=ids.distinct())
+
+    def predicate(self):
+        """``conv_id IN (...)`` over the listed ids. Parsed from one SQL
+        string: one JVM call for the whole list, where ``Column.isin``
+        makes several per id (36 s for 100,000 ids on a 4-core VM, against
+        0.04 s parsed). Ids a SQL string literal would have to escape take
+        the ``isin`` form."""
+        if self._pred is None:
+            ids = [i for i in self.ids if i is not None]
+            if not ids:
+                self._pred = F.lit(False)
+            elif all(isinstance(i, str) and "'" not in i and "\\" not in i for i in ids):
+                self._pred = F.expr("conv_id IN (" + ",".join(f"'{i}'" for i in ids) + ")")
+            else:
+                self._pred = F.col("conv_id").isin(ids)
+        return self._pred
+
+    def keep(self, df: DataFrame, anti: bool = False) -> DataFrame:
+        """``df`` restricted to the conversations in the set (``anti``: to
+        the ones outside it)."""
+        if self.frame is not None:
+            return df.join(self.frame, "conv_id", "left_anti" if anti else "left_semi")
+        hit = self.predicate()
+        return df.filter(~F.coalesce(hit, F.lit(False)) if anti else hit)
+
+    def flag(self, df: DataFrame, name: str) -> DataFrame:
+        """``df`` plus a boolean column ``name``: its conversation is in
+        the set."""
+        if self.frame is not None:
+            return df.join(
+                self.frame.select("conv_id", F.lit(True).alias(name)), "conv_id", "left"
+            ).fillna(False, subset=[name])
+        return df.withColumn(name, F.coalesce(self.predicate(), F.lit(False)))
+
+    def as_frame(self, spark: SparkSession) -> DataFrame:
+        """The set as a conv_id frame (for unions with other id frames)."""
+        if self.frame is not None:
+            return self.frame
+        return spark.createDataFrame([(i,) for i in self.ids], "conv_id string")
+
+
+def _part_dir_uri(spark: SparkSession, path: str) -> str:
+    """The qualified URI of a part directory with a trailing slash, spelled
+    as ``input_file_name()`` spells the files inside it."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs.makeQualified(jpath).toUri().toString().rstrip("/") + "/"
 
 
 def resolve_parts(
     spark: SparkSession,
     parts: list[dict],
     versions: DataFrame,
-    ids=None,
+    ids: IdSet | None = None,
 ) -> DataFrame:
     """Current rows of a delta-written table for the conversations in
     ``versions`` (conv_id, written_version): each conversation's
@@ -218,32 +297,34 @@ def resolve_parts(
     ``versions`` drops them.
 
     One scan and one join for any number of parts, not one join per part:
-    every part is read under one schema (the newest part's, inferred once;
-    the columns an older part lacks read as typed NULLs, the
-    ensure_columns rule), each row is tagged with the version of the part
-    its file path belongs to, and one semi-join on (conv_id, version) keeps
-    the current rows. ``ids`` (a list or a conv_id frame, see
-    :func:`keep_ids`) restricts ``versions`` and, as a pushed predicate,
-    every part scan."""
+    each row is tagged with the version of the part whose directory its
+    file lies in (one literal per part, whatever its file count), and one
+    semi-join on (conv_id, version) keeps the current rows.
+
+    Every part is read under the NEWEST part's schema, inferred once: it is
+    the table's current schema. A column an older part lacks reads as a
+    typed NULL (the ensure_columns rule); a column only older parts carry
+    is dropped, as the current writer no longer produces it. ``ids``
+    restricts ``versions`` and every part scan (see :class:`IdSet`)."""
     if ids is not None:
-        versions = keep_ids(versions, ids)
+        versions = ids.keep(versions)
     schema = spark.read.parquet(parts[-1]["path"]).schema
-    scans = [spark.read.schema(schema).parquet(p["path"]) for p in parts]
-    rows = scans[0]
-    for scan in scans[1:]:
-        rows = rows.unionByName(scan)
-    if ids is not None and not isinstance(ids, DataFrame):
-        rows = keep_ids(rows, ids)
+    rows = None
+    for p in parts:
+        scan = spark.read.schema(schema).parquet(p["path"])
+        rows = scan if rows is None else rows.unionByName(scan)
+    if ids is not None and ids.frame is None:
+        rows = ids.keep(rows)
     if len(parts) == 1:
         return rows.join(versions.select("conv_id"), "conv_id", "left_semi")
     # the part version from the file path, projected ABOVE the union: a
     # per-scan literal tag would let the optimizer push the semi-join into
     # every union branch (one join per part again)
     part_v = F.lit(None).cast("bigint")
-    for p, scan in zip(parts, scans):
-        part_v = F.when(F.input_file_name().isin(scan.inputFiles()), p["version"]).otherwise(
-            part_v
-        )
+    for p in parts:
+        part_v = F.when(
+            F.input_file_name().startswith(_part_dir_uri(spark, p["path"])), p["version"]
+        ).otherwise(part_v)
     current = versions.select(
         "conv_id", F.col("written_version").cast("bigint").alias("_part_v")
     )
@@ -654,8 +735,8 @@ class StateStore:
         table. Deleted conversations drop out naturally — they have no
         state row.
 
-        ``conv_ids``: optional restriction to a known id set — a list, or
-        a ``conv_id`` frame, which is semi-joined. Unlike a
+        ``conv_ids``: optional restriction to a known id set — a list or
+        an :class:`IdSet`. Unlike a
         semi-join (whose build side Parquet never sees), an ``isin`` filter
         reaches the scan as a pushed predicate, so files whose row-group
         conv_id min/max stats miss the set are skipped without reading —
@@ -676,30 +757,28 @@ class StateStore:
         versions = self.read(spark, version=version).select(
             "conv_id", F.col(pointer).alias("written_version")
         )
+        if conv_ids is not None and not isinstance(conv_ids, IdSet):
+            conv_ids = IdSet(ids=list(conv_ids))
         return resolve_parts(spark, parts, versions, conv_ids)
 
     def read_convs(
         self,
         spark: SparkSession,
         kind: str,
-        ids,
+        ids: DataFrame,
         versions: tuple = (None,),
     ) -> list[DataFrame]:
-        """The ``kind`` rows of the conversations in ``ids``, one frame per
-        entry of ``versions`` (None: the current snapshot).
+        """The ``kind`` rows of the conversations in ``ids`` (a ``conv_id``
+        frame), one frame per entry of ``versions`` (None: the current
+        snapshot).
 
-        ``ids`` is a driver list of conv_ids or a ``conv_id`` frame. A frame
-        is collected ONCE, capped at PUSHDOWN_LIMIT (the driver-memory
-        guard); a list is used as it is. Under the cap the ids reach every
-        read as a pushed ``isin`` predicate: row groups whose conv_id stats
-        miss the set are skipped unread — an indexed fetch instead of an
-        O(table) scan. Above the cap each read semi-joins the frame
-        instead: correct, just not row-group-pruned."""
-        if isinstance(ids, DataFrame):
-            sample = ids.select("conv_id").take(PUSHDOWN_LIMIT + 1)
-            if len(sample) <= PUSHDOWN_LIMIT:
-                ids = [r["conv_id"] for r in sample]
-        return [self.read_table(spark, kind, conv_ids=ids, version=v) for v in versions]
+        The ids are collected ONCE, capped at PUSHDOWN_LIMIT, and every
+        read shares their one pushed ``IN`` predicate: row groups whose
+        conv_id stats miss the set are skipped unread — an indexed fetch
+        instead of an O(table) scan. Above the cap each read semi-joins
+        ``ids`` instead: correct, just not row-group-pruned."""
+        conv_ids = IdSet.collect(ids)
+        return [self.read_table(spark, kind, conv_ids=conv_ids, version=v) for v in versions]
 
     def changed_convs(
         self, spark: SparkSession, kind: str, v_from: int, v_to: int | None = None
